@@ -2,9 +2,6 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.core.Tables
-import graft.sim.Semantic
-
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
   * Query registry is assembled from per-module maps (one module per
@@ -22,13 +19,7 @@ object SparkEntry {
     */
   def entry(spark: SparkSession): DataFrame = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val docs = Tables.documents(spark, sfDir)
-    val tf = graft.tfidf.TfIdf.tfidf(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out = Semantic.relatedTermsFrom(tf, Semantic.queryTermFrom(tf), k = 20)
-      .localCheckpoint(true)
-    tf.unpersist(false)
-    out
+    ops.CoreQueries.queries("q_related_terms")(spark, sfDir)
   }
 
   private def modules: Seq[QueryModule] = Seq(

@@ -36,8 +36,9 @@ object CoreQueries extends graft.QueryModule {
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_related_terms" -> { (spark, dir) =>
       val docs = Tables.documents(spark, dir)
-      // tf persisted across the three passes (query-term derivation,
-      // norm, aggregation), dropped once the k-row result materializes
+      // tf persisted across its three reads (query-term derivation,
+      // query vector, candidate aggregation), dropped once the k-row
+      // result materializes
       val tf = TfIdf.tfidf(docs)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val out = Semantic.relatedTermsFrom(tf, Semantic.queryTermFrom(tf), k = 20)

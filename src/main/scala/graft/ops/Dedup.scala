@@ -2402,12 +2402,14 @@ object Dedup extends graft.QueryModule {
         math.min(4, snapIds.size))
       implicit val ec: scala.concurrent.ExecutionContext =
         scala.concurrent.ExecutionContext.fromExecutor(pool)
-      try {
-        val futs = snapIds.map(id => scala.concurrent.Future(healOne(id)))
-        scala.concurrent.Await.result(
-          scala.concurrent.Future.sequence(futs),
-          scala.concurrent.duration.Duration.Inf)
+      // every heal is awaited before the first failure rethrows: a
+      // caller that catches it and re-runs must not race a sibling's
+      // rewrite still in flight
+      val heals = try {
+        snapIds.map(id => scala.concurrent.Future(scala.util.Try(healOne(id))))
+          .map(scala.concurrent.Await.result(_, scala.concurrent.duration.Duration.Inf))
       } finally pool.shutdown()
+      heals.foreach(_.get)
     }
     require(blocked.isEmpty,
       s"healAssignments: sigs partitions ${tornSigs.sorted.mkString(",")} " +

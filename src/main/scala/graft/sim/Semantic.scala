@@ -1,9 +1,9 @@
 package graft.sim
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import org.apache.spark.sql.types._
 
 import graft.tfidf.TfIdf
 
@@ -17,17 +17,17 @@ import graft.tfidf.TfIdf
   * broadcast could exceed limits, so the join strategy is a parameter —
   * `broadcastQuery = false` falls back to a shuffled left join.
   *
-  * The algorithm needs three passes over the TF-IDF table (query-term
-  * derivation when auto, query-norm scalar, candidate aggregation), so
-  * [[relatedTerms]] persists it once instead of recomputing the
-  * tokenize→count→window chain per pass — the 100 TB analogue is
+  * A query reads the TF-IDF table twice: once to build the query vector
+  * (which carries ‖q‖ as a window over its own rows, so the norm costs
+  * no pass and no driver round-trip of its own) and once for the
+  * candidate aggregation — two Spark jobs and no shuffle. Deriving the
+  * query term when auto adds one more read, so [[relatedTerms]]
+  * persists the table once instead of recomputing the
+  * tokenize→count→window chain per read — the 100 TB analogue is
   * checkpointing the tf-idf table, which a multi-query service would
   * share across requests anyway.
   */
 object Semantic {
-
-  val outputSchema: StructType = StructType(Seq(
-    StructField("term", StringType), StructField("sim", DoubleType)))
 
   /** Deterministic data-derived query term: highest document frequency,
     * ties broken by lexicographically smallest term. Keeps declared
@@ -85,14 +85,14 @@ object Semantic {
       termPred: Option[Column] = None,
       broadcastQuery: Boolean = true,
       roundDigits: Int = 9): DataFrame = {
-    val spark = tf.sparkSession
-    val qvec = tf.filter(col("term") === lit(query)).select(col("doc_id"), col("tfidf").as("v1"))
-    // ‖query‖₂ — a one-row aggregate, the only scalar the driver sees.
-    val den1 = qvec.agg(sqrt(sum(col("v1") * col("v1")))).collect().headOption
-      .flatMap(r => Option(r.get(0)).map(_.asInstanceOf[Double]))
-      .getOrElse(0.0)
-    if (den1 == 0.0)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], outputSchema)
+    // ‖query‖₂ rides the query vector: every row has the same term, so
+    // the window covers the whole vector, and the table is already
+    // hash(term)-partitioned, so it adds no exchange. An absent term (no
+    // rows) or one with idf 0 (‖q‖ = 0, every v1 = 0) leaves num = 0 on
+    // every candidate, and the nonzero filter below empties the result.
+    val qvec = tf.filter(col("term") === lit(query))
+      .select(col("doc_id"), col("tfidf").as("v1"),
+        sqrt(sum(col("tfidf") * col("tfidf")).over(Window.partitionBy("term"))).as("den1"))
 
     val candidates0 = tf.filter(col("term") =!= lit(query))
     val candidates = termPred.fold(candidates0)(candidates0.filter)
@@ -100,11 +100,14 @@ object Semantic {
 
     candidates
       .join(q, Seq("doc_id"), "left")
-      .select(col("term"), coalesce(col("v1"), lit(0.0)).as("v1"), col("tfidf"))
+      .select(col("term"), coalesce(col("v1"), lit(0.0)).as("v1"), col("tfidf"), col("den1"))
       .groupBy("term")
       .agg(
         sum(col("v1") * col("tfidf")).as("num"),
-        sum(col("tfidf") * col("tfidf")).as("den2"))
+        sum(col("tfidf") * col("tfidf")).as("den2"),
+        // non-null on exactly the groups that matched a query doc, a
+        // superset of the num ≠ 0 groups that survive the filter
+        max(col("den1")).as("den1"))
       .filter(col("num") =!= 0.0)
       .select(
         col("term"), {
@@ -112,7 +115,7 @@ object Semantic {
           // declared queries round for Spark-vs-oracle sum-order noise.
           // Two-step division mirrors the reference's arithmetic order
           // (app.py:110 then :178) bit-for-bit.
-          val s = (col("num") / sqrt(col("den2"))) / lit(den1)
+          val s = (col("num") / sqrt(col("den2"))) / col("den1")
           (if (roundDigits >= 0) round(s, roundDigits) else s).as("sim")
         })
       .orderBy(col("sim").desc, col("term"))

@@ -119,11 +119,12 @@ object Shingles {
     * hex string and re-parsed 8 digits per call; the kernel reads the
     * digest's first 4 bytes directly, bit-identical value). The DuckDB
     * mirror (no conv function there) assembles the same value
-    * nibble-by-nibble.
+    * nibble-by-nibble. Input is cast to string, as md5 did implicitly;
+    * on string input the optimizer drops the cast.
     */
   def hash32(c: Column): Column =
     graft.functions.ColShim.column(
-      graft.functions.Hash32(graft.functions.ColShim.expression(c)))
+      graft.functions.Hash32(graft.functions.ColShim.expression(c.cast("string"))))
 
   /** SQL mirror of [[hash32]] (DuckDB). ascii() is INT32 there, so each
     * nibble is cast to BIGINT before the power-of-16 multiply.

@@ -346,6 +346,33 @@ class DedupDeleteSpec extends AnyFunSuite {
       === assignSet(Dedup.dupClusters(docs.filter(!delPred), 0.5)))
   }
 
+  test("a failed snapshot heal rethrows only after its sibling heals finish: " +
+      "no rewrite is still in flight when the error surfaces") {
+    val state = tmp("dedup-heal-drain")
+    Dedup.clustersIngestBatch(docs.filter(col("doc_id") < 400), 0, state)
+    Dedup.clustersIngestBatch(docs.filter(col("doc_id") >= 400), 1, state)
+    // a crashed delete: the tombstones landed, the heal never ran
+    docs.filter(delPred).select("doc_id").distinct()
+      .write.parquet(s"$state/tombstones/del=1")
+    // snapshot 0's heal fails at its first read (corrupt part files),
+    // long before snapshot 1's ladder of heal jobs can finish
+    val fs = new org.apache.hadoop.fs.Path(state)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    fs.listStatus(new org.apache.hadoop.fs.Path(s"$state/assign/ingest_batch=0"))
+      .map(_.getPath).filter(_.getName.startsWith("part-")).foreach { p =>
+        val out = fs.create(p, true)
+        try out.write("not parquet".getBytes("UTF-8")) finally out.close()
+      }
+    intercept[Exception](Dedup.healAssignments(spark, state))
+    // checked the moment the error surfaces: no rewrite tmp or park
+    // left under assign, and snapshot 1 already healed
+    val names = fs.listStatus(new org.apache.hadoop.fs.Path(s"$state/assign"))
+      .map(_.getPath.getName)
+    assert(!names.exists(_.startsWith("_rw_")), names.mkString(","))
+    val unhealed = spark.read.parquet(s"$state/assign/ingest_batch=1").filter(delPred)
+    assert(unhealed.isEmpty, "snapshot 1 still holds tombstoned docs: its heal was still running")
+  }
+
   test("versioned deletion log (r12 verdict #5): compactions APPEND sealed " +
       "log dirs, suppression spans all of them, the family folds past the " +
       "threshold, and re-admission removes exactly the requested ids") {

@@ -24,27 +24,38 @@ class GoldenFixtureSpec extends AnyFunSuite {
     "d4" -> "gene_egfr_gene gene_tp53_gene gene_tp53_gene",
     "d5" -> "apple banana cherry")
 
+  /** Unrounded (`roundDigits = -1`), so the reference's printed doubles
+    * can be compared exactly. */
   private def related(query: String): Seq[(String, Double)] =
-    Semantic.relatedTerms(golden, query, k = 5, termPred = Some(Semantic.geneTermPredicate))
+    Semantic.relatedTerms(golden, query, k = 5, termPred = Some(Semantic.geneTermPredicate),
+      roundDigits = -1)
       .collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
 
   test("golden: query gene_egfr_gene → tp53 then kras (FIXTURES A.2)") {
-    val got = related("gene_egfr_gene")
-    assert(got.map(_._1) == Seq("gene_tp53_gene", "gene_kras_gene"))
-    assert(math.abs(got(0)._2 - 0.7096661947545744) < 1e-8)
-    assert(math.abs(got(1)._2 - 0.34299717028501764) < 1e-8)
+    assert(related("gene_egfr_gene") ==
+      Seq("gene_tp53_gene" -> 0.7096661947545744, "gene_kras_gene" -> 0.34299717028501764))
   }
 
   test("golden: query gene_tp53_gene → egfr only (kras sim 0 filtered)") {
-    val got = related("gene_tp53_gene")
-    assert(got.map(_._1) == Seq("gene_egfr_gene"))
-    assert(math.abs(got(0)._2 - 0.7096661947545744) < 1e-8)
+    assert(related("gene_tp53_gene") == Seq("gene_egfr_gene" -> 0.7096661947545744))
   }
 
   test("golden: symmetry sim(kras→egfr) == sim(egfr→kras)") {
-    val got = related("gene_kras_gene")
-    assert(got.map(_._1) == Seq("gene_egfr_gene"))
-    assert(math.abs(got(0)._2 - 0.34299717028501764) < 1e-8)
+    assert(related("gene_kras_gene") == Seq("gene_egfr_gene" -> 0.34299717028501764))
+  }
+
+  test("edge: a query term in every document (idf 0, so ‖q‖ = 0) → empty result") {
+    val c = corpus("d1" -> "the apple", "d2" -> "the banana apple", "d3" -> "the cherry")
+    assert(Semantic.relatedTerms(c, "the", k = 5).collect().isEmpty)
+  }
+
+  test("edge: a termPred that excludes the query term still scores the terms it keeps") {
+    // the query's own vector is read from the unfiltered table; tp53
+    // never shares a document with apple, so it scores 0 and drops
+    val got = related("apple")
+    assert(got.map(_._1) == Seq("gene_kras_gene", "gene_egfr_gene"))
+    assert(math.abs(got(0)._2 - 0.816496580927726) < 1e-12)
+    assert(math.abs(got(1)._2 - 0.28005601680560194) < 1e-12)
   }
 
   test("golden: nonexistent query term → empty result, no error") {

@@ -28,4 +28,18 @@ class Hash32Spec extends AnyFunSuite {
     val v = r.filter(!_.isNullAt(0)).map(_.getLong(0))
     assert(v.forall(x => x >= 0L && x <= 0xffffffffL))
   }
+
+  test("hash32 casts non-string input to string, as the md5 chain did; " +
+      "on string input the cast is optimized away") {
+    val ids = spark.range(0, 2000).select(col("id"), col("id").cast("string").as("s"))
+    val bad = ids.filter(graft.text.Shingles.hash32(col("id"))
+      =!= graft.text.Shingles.hash32(col("s")))
+    assert(bad.isEmpty, bad.take(5).mkString(","))
+    val onString = ids.select("s").localCheckpoint()
+      .select(graft.text.Shingles.hash32(col("s")))
+      .queryExecution.optimizedPlan
+    val casts = onString.expressions.flatMap(_.collect {
+      case c: org.apache.spark.sql.catalyst.expressions.Cast => c })
+    assert(casts.isEmpty, onString)
+  }
 }

@@ -13,6 +13,39 @@ class PlanSpec extends AnyFunSuite {
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan.toString
 
+  private def jobsIn[T](group: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try body finally sc.clearJobGroup()
+  }
+
+  /** Shuffle exchanges in an executed plan, stopping at cached-table
+    * scans (the cached table's own build plan is not this query's). */
+  private def shuffles(p: org.apache.spark.sql.execution.SparkPlan): Int = {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    p match {
+      case a: AdaptiveSparkPlanExec => shuffles(a.executedPlan)
+      case s: QueryStageExec => shuffles(s.plan)
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike =>
+        1 + e.children.map(shuffles).sum
+      case other => other.children.map(shuffles).sum
+    }
+  }
+
+  /** Jobs run under `group`. The status tracker is fed by the listener
+    * bus, in event order: once a marker job submitted afterwards shows
+    * up, every earlier job has too. */
+  private def jobCount(group: String): Int = {
+    val sc = spark.sparkContext
+    val marker = s"$group-marker"
+    jobsIn(marker)(sc.parallelize(Seq(1), 1).count())
+    val deadline = System.nanoTime() + 10_000_000_000L
+    while (sc.statusTracker.getJobIdsForGroup(marker).isEmpty && System.nanoTime() < deadline)
+      Thread.sleep(10)
+    assert(sc.statusTracker.getJobIdsForGroup(marker).nonEmpty, s"marker job of $group never surfaced")
+    sc.statusTracker.getJobIdsForGroup(group).length
+  }
+
   test("q_top_orders plans as TakeOrderedAndProject (no global sort)") {
     val p = plan("q_top_orders")
     assert(p.contains("TakeOrderedAndProject"), p)
@@ -55,6 +88,27 @@ class PlanSpec extends AnyFunSuite {
     val df = graft.sim.Semantic.relatedTermsFrom(tf, graft.sim.Semantic.queryTermFrom(tf), 5)
     val p = df.queryExecution.executedPlan.toString
     assert(p.contains("BroadcastHashJoin"), p)
+  }
+
+  test("relatedTermsFrom on a persisted tf: building the frame runs no job, " +
+      "collecting it runs two (query-vector broadcast, aggregate + top-k), no shuffle") {
+    val docs = graft.core.Tables.documents(spark, dir)
+    val tf = graft.tfidf.TfIdf.tfidf(docs)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      tf.count()
+      val q = graft.sim.Semantic.queryTermFrom(tf)
+      val df = jobsIn("plan-related-build") {
+        graft.sim.Semantic.relatedTermsFrom(tf, q, 5)
+      }
+      assert(jobCount("plan-related-build") === 0)
+      val rows = jobsIn("plan-related-collect")(df.collect())
+      assert(rows.nonEmpty)
+      assert(jobCount("plan-related-collect") === 2)
+      val p = df.queryExecution.executedPlan
+      assert(shuffles(p) === 0, p)
+      assert(p.toString.contains("BroadcastExchange"), p)
+    } finally tf.unpersist(false)
   }
 
   test("q_window_topn gets the WindowGroupLimit pushdown for rn <= 3") {
