@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Kernels
 
 /** Dev utility: quality metrics for the approximate operators — the
   * companion to Bench's speed numbers. Measures IVF recall against the
@@ -105,7 +106,7 @@ object EvalProbe {
     val e = emb.select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     val bands = (0 until 4).map { b =>
       e.select(col("vec_id"), lit(b).as("band"),
-        graft.ops.VectorOps.lshBucketCol(col("v"), 4, 64, b * 4).as("bkt"))
+        Kernels.lshSignWord(col("v"), 4, 64, b * 4).as("bkt"))
     }.reduce(_ union _)
     val nCand = bands.as("x").join(bands.as("y"),
         col("x.band") === col("y.band") && col("x.bkt") === col("y.bkt") &&

@@ -2,24 +2,18 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.graft.Kernels
 
-import graft.functions.ArrayCosine
-
-/** Library install point: `--conf spark.sql.extensions=graft.GraftExtensions`
+/** SQL install point: `--conf spark.sql.extensions=graft.GraftExtensions`
   * (or `SparkSession.builder.withExtensions(new GraftExtensions)`) makes
-  * every graft native expression available in any session — SQL,
-  * `call_function`, thriftserver — without per-session registration
-  * calls. [[graft.functions.GraftFunctions.register]] remains as the
-  * imperative per-session fallback the query modules use on sessions
-  * built without the conf.
+  * every graft native kernel ([[Kernels.sqlFunctions]]) callable by name
+  * from SQL in that session. Library code needs neither: it builds the
+  * kernels through the typed [[Kernels]] Column builders.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("array_cosine"),
-      new ExpressionInfo(classOf[ArrayCosine].getName, "array_cosine"),
-      (exprs: Seq[Expression]) => ArrayCosine(exprs(0), exprs(1))))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    Kernels.sqlFunctions.foreach { case (name, info, build) =>
+      ext.injectFunction((FunctionIdentifier(name), info, build))
+    }
 }

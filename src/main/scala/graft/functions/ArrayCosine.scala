@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -74,77 +73,4 @@ case class ArrayCosine(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): ArrayCosine =
     copy(left = newLeft, right = newRight)
-}
-
-/** Registration + Column-level access for graft's native expressions. */
-object GraftFunctions {
-  /** Idempotent per-session registration; afterwards the function is
-    * callable from SQL and via `call_function("array_cosine", a, b)`.
-    */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val cosId = org.apache.spark.sql.catalyst.FunctionIdentifier("array_cosine")
-    if (!reg.functionExists(cosId)) {
-      reg.createOrReplaceTempFunction(
-        "array_cosine", exprs => ArrayCosine(exprs(0), exprs(1)), "built-in")
-    }
-    val dotId = org.apache.spark.sql.catalyst.FunctionIdentifier("array_dot_long")
-    if (!reg.functionExists(dotId)) {
-      reg.createOrReplaceTempFunction(
-        "array_dot_long", exprs => ArrayDotLong(exprs(0), exprs(1)), "built-in")
-    }
-    val adcId = org.apache.spark.sql.catalyst.FunctionIdentifier("adc_score_long")
-    if (!reg.functionExists(adcId)) {
-      reg.createOrReplaceTempFunction(
-        "adc_score_long", exprs => AdcScoreLong(exprs(0), exprs(1)), "built-in")
-    }
-    val nbId = org.apache.spark.sql.catalyst.FunctionIdentifier("nb_class_sums")
-    if (!reg.functionExists(nbId)) {
-      reg.createOrReplaceTempFunction(
-        "nb_class_sums", exprs => NbClassSums(exprs(0), exprs(1), exprs(2)), "built-in")
-    }
-    val hbId = org.apache.spark.sql.catalyst.FunctionIdentifier("hash32_buckets")
-    if (!reg.functionExists(hbId)) {
-      reg.createOrReplaceTempFunction(
-        "hash32_buckets", exprs => Hash32Buckets(exprs(0), exprs(1)), "built-in")
-    }
-    val tsId = org.apache.spark.sql.catalyst.FunctionIdentifier("token_spans")
-    if (!reg.functionExists(tsId)) {
-      reg.createOrReplaceTempFunction(
-        "token_spans", exprs => TokenSpans(exprs(0), exprs(1)), "built-in")
-    }
-    val tpId = org.apache.spark.sql.catalyst.FunctionIdentifier("token_pairs")
-    if (!reg.functionExists(tpId)) {
-      reg.createOrReplaceTempFunction(
-        "token_pairs", exprs => TokenPairs(exprs(0)), "built-in")
-    }
-    val bfId = org.apache.spark.sql.catalyst.FunctionIdentifier("bpe_merge_fold_all")
-    if (!reg.functionExists(bfId)) {
-      reg.createOrReplaceTempFunction(
-        "bpe_merge_fold_all", exprs => BpeMergeFoldAll(exprs(0), exprs(1)), "built-in")
-    }
-    val bwId = org.apache.spark.sql.catalyst.FunctionIdentifier("bpe_encode_word")
-    if (!reg.functionExists(bwId)) {
-      reg.createOrReplaceTempFunction(
-        "bpe_encode_word", exprs => BpeEncodeWord(exprs(0), exprs(1)), "built-in")
-    }
-    val apId = org.apache.spark.sql.catalyst.FunctionIdentifier("array_adj_pairs")
-    if (!reg.functionExists(apId)) {
-      reg.createOrReplaceTempFunction(
-        "array_adj_pairs", exprs => ArrayAdjPairs(exprs(0)), "built-in")
-    }
-    val lswId = org.apache.spark.sql.catalyst.FunctionIdentifier("lsh_sign_word")
-    if (!reg.functionExists(lswId)) {
-      def intLit(e: org.apache.spark.sql.catalyst.expressions.Expression): Int =
-        e match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-          case other => throw new IllegalArgumentException(
-            s"lsh_sign_word expects integer literals for (nPlanes, dims, planeOffset), got $other")
-        }
-      reg.createOrReplaceTempFunction(
-        "lsh_sign_word",
-        exprs => LshSignWord(exprs(0), intLit(exprs(1)), intLit(exprs(2)),
-          intLit(exprs(3))), "built-in")
-    }
-  }
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -58,25 +57,4 @@ object Hash32 {
     ((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) |
       ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)
   }
-}
-
-/** Session-free Expression ⇄ Column bridge. Spark 4's classic-API
-  * converters (`org.apache.spark.sql.classic.ExpressionUtils`) are
-  * `private[sql]` at the Scala level but public in bytecode; going
-  * through a method handle keeps pure Column builders (e.g.
-  * [[graft.text.Shingles.hash32]], which has no SparkSession in scope)
-  * able to emit native expressions without depending on per-session
-  * function registration. Driver-side plan construction only — never
-  * on the row path.
-  */
-private[graft] object ColShim {
-  private val cls =
-    Class.forName("org.apache.spark.sql.classic.ExpressionUtils")
-  private val toColumn = cls.getMethod("column", classOf[Expression])
-  private val toExpr = cls.getMethod("expression", classOf[Column])
-
-  def column(e: Expression): Column =
-    toColumn.invoke(null, e).asInstanceOf[Column]
-  def expression(c: Column): Expression =
-    toExpr.invoke(null, c).asInstanceOf[Expression]
 }

@@ -10,7 +10,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
   * nPlanes), bit p of the result is 1 iff the left-folded ascending
   * dot product of the vector with plane (planeOffset + p)'s splitmix64
   * pseudo-weights is > 0 — exactly the decision the compositional
-  * `lshBucketCol` column tree makes, in the same IEEE accumulation
+  * column tree it replaced made, in the same IEEE accumulation
   * order (ascending index, single accumulator; a null element nulls
   * that plane's dot, which contributes 0 to the word, and an index
   * past the array end raises, like ANSI element_at).

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Kernels
 
 import graft.core.Tables
 import graft.text.Shingles
@@ -78,16 +79,13 @@ object Bpe extends graft.QueryModule {
     * is not known at plan-build time (see
     * [[graft.streaming.DocStream.tokenizeOnIngest]]).
     */
-  private[graft] def mergeFoldDyn(syms: Column, lft: Column, rgt: Column): Column = {
+  private[graft] def mergeFoldDyn(syms: Column, lft: Column, rgt: Column): Column =
     // native kernel (r17, guide §4 / the TokenSpans precedent): the
     // HOF `aggregate` fold ran through the lambda interpreter per
     // element and built one intermediate accumulator array per symbol;
     // the kernel is one JVM loop with identical greedy semantics
     // (BpeFold.foldOnce — null sides never compare equal, plain append)
-    graft.functions.GraftFunctions.register(SparkSession.active)
-    call_function("bpe_merge_fold_all", syms,
-      array(struct(lft.as("lft"), rgt.as("rgt"))))
-  }
+    Kernels.bpeMergeFoldAll(syms, array(struct(lft.as("lft"), rgt.as("rgt"))))
 
   /** The trained tokenizer packed for SERVING: one row whose `merges`
     * column is the step-ordered array of (lft, rgt) rules — the same
@@ -127,7 +125,7 @@ object Bpe extends graft.QueryModule {
     val merges = Seq.newBuilder[Merge]
     for (step <- 1 to k) {
       val top = syms
-        .select(col("freq"), explode(adjPairs(col("syms"))).as("p"))
+        .select(col("freq"), explode(Kernels.arrayAdjPairs(col("syms"))).as("p"))
         .groupBy(col("p.lft").as("lft"), col("p.rgt").as("rgt"))
         .agg(sum(col("freq")).as("c"))
         .orderBy(col("c").desc, col("lft"), col("rgt"))
@@ -140,16 +138,6 @@ object Bpe extends graft.QueryModule {
     }
     (merges.result(), syms)
   }
-
-  /** Adjacent symbol pairs of a symbol array as (lft, rgt) structs. */
-  private def adjPairs(syms: Column): Column =
-    {
-      // native kernel (r17): the zip_with(slice, slice) chain built two
-      // intermediate arrays per word per round through the lambda
-      // interpreter; one JVM loop, identical (lft, rgt) pairs
-      graft.functions.GraftFunctions.register(SparkSession.active)
-      call_function("array_adj_pairs", syms)
-    }
 
   /** [[train]]'s production-shaped sibling: the INCREMENTAL pair-count
     * trainer — spec-pinned to produce the identical merge sequence
@@ -169,7 +157,7 @@ object Bpe extends graft.QueryModule {
   private[graft] def trainIncremental(docs: DataFrame, k: Int): Seq[Merge] = {
     var words = symbolTable(docs).localCheckpoint(true)
     var pc = words
-      .select(col("freq"), explode(adjPairs(col("syms"))).as("p"))
+      .select(col("freq"), explode(Kernels.arrayAdjPairs(col("syms"))).as("p"))
       .groupBy(col("p.lft").as("lft"), col("p.rgt").as("rgt"))
       .agg(sum(col("freq")).as("c"))
       .localCheckpoint(true)
@@ -185,10 +173,10 @@ object Bpe extends graft.QueryModule {
       val delta = updated
         .filter(col("new_syms") =!= col("syms"))
         .select(explode(concat(
-          transform(adjPairs(col("new_syms")),
+          transform(Kernels.arrayAdjPairs(col("new_syms")),
             p => struct(p.getField("lft").as("lft"), p.getField("rgt").as("rgt"),
               col("freq").as("c"))),
-          transform(adjPairs(col("syms")),
+          transform(Kernels.arrayAdjPairs(col("syms")),
             p => struct(p.getField("lft").as("lft"), p.getField("rgt").as("rgt"),
               (-col("freq")).as("c"))))).as("d"))
         .select(col("d.lft").as("lft"), col("d.rgt").as("rgt"), col("d.c").as("c"))
@@ -204,7 +192,7 @@ object Bpe extends graft.QueryModule {
 
   /** Distinct adjacent pairs of a word's symbols — its postings keys. */
   private def postingsOf(words: DataFrame): DataFrame =
-    words.select(col("word"), explode(array_distinct(adjPairs(col("syms")))).as("p"))
+    words.select(col("word"), explode(array_distinct(Kernels.arrayAdjPairs(col("syms")))).as("p"))
       .select(col("p.lft").as("lft"), col("p.rgt").as("rgt"), col("word"))
 
   /** The production rung above [[trainIncremental]]: an inverted
@@ -245,7 +233,7 @@ object Bpe extends graft.QueryModule {
     import spark.implicits._
     val wordsBase = symbolTable(docs).localCheckpoint(true)
     var pc = wordsBase
-      .select(col("freq"), explode(adjPairs(col("syms"))).as("p"))
+      .select(col("freq"), explode(Kernels.arrayAdjPairs(col("syms"))).as("p"))
       .groupBy(col("p.lft").as("lft"), col("p.rgt").as("rgt"))
       .agg(sum(col("freq")).as("c"))
       .localCheckpoint(true)
@@ -276,10 +264,10 @@ object Bpe extends graft.QueryModule {
         .localCheckpoint(true)
       val delta = affected
         .select(explode(concat(
-          transform(adjPairs(col("new_syms")),
+          transform(Kernels.arrayAdjPairs(col("new_syms")),
             p => struct(p.getField("lft").as("lft"), p.getField("rgt").as("rgt"),
               col("freq").as("c"))),
-          transform(adjPairs(col("syms")),
+          transform(Kernels.arrayAdjPairs(col("syms")),
             p => struct(p.getField("lft").as("lft"), p.getField("rgt").as("rgt"),
               (-col("freq")).as("c"))))).as("d"))
         .select(col("d.lft").as("lft"), col("d.rgt").as("rgt"), col("d.c").as("c"))
@@ -398,14 +386,13 @@ object Bpe extends graft.QueryModule {
     // semantics rule for rule, so the encode output is bit-identical
     // (BpeSpec pins self-application == bpeEncode on top of the
     // oracle hash).
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val ordered = merges.sortBy(_.step)
     if (ordered.isEmpty) return encodeFrom(docs, symbolTable(docs))
     val rules = array(ordered.map(m =>
       struct(lit(m.lft).as("lft"), lit(m.rgt).as("rgt"))): _*)
     val finalSyms = Shingles.tokensWithPos(docs)
       .groupBy(col("term").as("word")).agg(count(lit(1)).as("freq"))
-      .withColumn("syms", call_function("bpe_encode_word", col("word"), rules))
+      .withColumn("syms", Kernels.bpeEncodeWord(col("word"), rules))
     encodeFrom(docs, finalSyms)
   }
 

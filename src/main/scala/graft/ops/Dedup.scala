@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Kernels
 
 import graft.core.Tables
 import graft.text.Shingles
@@ -1298,13 +1299,12 @@ object Dedup extends graft.QueryModule {
   def semanticDedup(docs: DataFrame, embeddings: DataFrame,
       minEstJaccard: Double = 0.5, minCos: Double = 0.9,
       maxOccupancy: Long = Long.MaxValue): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val e = embeddings.select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     minhashCandidates(docs, minEstJaccard, maxOccupancy)
       .join(e.as("e1"), col("d1") === col("e1.vec_id"))
       .join(e.as("e2"), col("d2") === col("e2.vec_id"))
       .select(col("d1"), col("d2"), col("est_jaccard"),
-        round(call_function("array_cosine", col("e1.v"), col("e2.v")), 6).as("emb_cos"))
+        round(Kernels.arrayCosine(col("e1.v"), col("e2.v")), 6).as("emb_cos"))
       .withColumn("confirmed", col("emb_cos") >= lit(minCos))
   }
 
@@ -2749,7 +2749,6 @@ object Dedup extends graft.QueryModule {
     */
   def embeddingNearDupExact(embeddings: DataFrame, k: Int = 20,
       blockSize: Long = 100L): DataFrame = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     val e = embeddings.select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     val blocked = e.withColumn("blk", (col("vec_id") / lit(blockSize)).cast("long"))
     val blks = blocked.select(col("blk")).distinct()
@@ -2761,7 +2760,7 @@ object Dedup extends graft.QueryModule {
       .filter(col("a.vec_id") < col("b.vec_id"))
       .select(
         col("a.vec_id").as("v1"), col("b.vec_id").as("v2"),
-        round(call_function("array_cosine", col("a.v"), col("b.v")), 6).as("cos"))
+        round(Kernels.arrayCosine(col("a.v"), col("b.v")), 6).as("cos"))
       .orderBy(col("cos").desc, col("v1"), col("v2"))
       .limit(k)
   }
@@ -2786,7 +2785,6 @@ object Dedup extends graft.QueryModule {
   def embeddingNearDupLsh(embeddings: DataFrame, planesPerBand: Int = 4,
       nBands: Int = 4, dims: Int = 64, k: Int = 20,
       maxOccupancy: Long = Long.MaxValue): DataFrame = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     val e = embeddings.select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // one union branch per band over the persisted table, NOT one fused
@@ -2809,7 +2807,7 @@ object Dedup extends graft.QueryModule {
         e.select(
           col("vec_id"),
           posexplode(array((0 until nBands).map(bd =>
-            VectorOps.lshBucketCol(col("v"), planesPerBand, dims,
+            Kernels.lshSignWord(col("v"), planesPerBand, dims,
               bd * planesPerBand)): _*)).as(Seq("band", "bkt"))),
         Seq("band", "bkt"), maxOccupancy)
       if (capActive)
@@ -2825,7 +2823,7 @@ object Dedup extends graft.QueryModule {
       .join(e.as("e1"), col("v1") === col("e1.vec_id"))
       .join(e.as("e2"), col("v2") === col("e2.vec_id"))
       .select(col("v1"), col("v2"),
-        round(call_function("array_cosine", col("e1.v"), col("e2.v")), 6).as("cos"))
+        round(Kernels.arrayCosine(col("e1.v"), col("e2.v")), 6).as("cos"))
       .orderBy(col("cos").desc, col("v1"), col("v2"))
       .limit(k)
       .localCheckpoint(true)

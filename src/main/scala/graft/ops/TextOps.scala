@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Kernels
 import org.apache.spark.sql.types.DecimalType
 
 import graft.core.Tables
@@ -147,25 +148,27 @@ object TextOps extends graft.QueryModule {
     * left join (co-partitioned; a bloom filter replaces it when the
     * type set outgrows comfortable shuffles).
     */
-  /** The adjacent-bigram stream (doc_id, [carry…,] w1, w2) via the
-    * native [[graft.functions.TokenPairs]] kernel (r17): the lead
-    * WINDOW this replaces shuffled AND sorted the whole token stream
-    * (guide §2.4), and its lead(pos) = pos + 1 guard only ever dropped
-    * pairs spanning filtered empty tokens — pairs the corpus
-    * tokenization rule never produces, so the kernel's
-    * adjacent-of-filtered multiset is identical (the q_bigram_nll
-    * precedent; oracle-gated). PlanSpec pins the no-join,
+  /** The adjacent-bigram stream (doc_id, [carry…,] w1, w2): each pair
+    * of ADJACENT NON-EMPTY tokens, so consecutive spaces never break a
+    * bigram — the oracles pair the filtered tokens with
+    * lag(term) over (partition by doc_id order by pos), the same rule.
+    * Built per document by the native [[graft.functions.TokenPairs]]
+    * kernel (r17): the lag/lead window it replaces shuffled and sorted
+    * the whole token stream once per consumer (guide §2.4), and the
+    * r16 HOF rewrite (indexed transform + get) removed the exchange but
+    * ran through the lambda interpreter per element (q_bigram_nll
+    * 0.92×). The kernel keeps zero exchanges AND enters whole-stage
+    * codegen; spreadSmall parallelizes it when the corpus scans as one
+    * task, production scans pass through. PlanSpec pins the no-join,
     * no-window shape.
     */
   private[graft] def bigramStream(docs: DataFrame,
-      carry: Seq[String]): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
+      carry: Seq[String] = Nil): DataFrame =
     graft.core.Tables.spreadSmall(docs, "doc_id")
       .select(col("doc_id") +: carry.map(col) :+
-        inline(call_function("token_pairs", col("text"))): _*)
+        inline(Kernels.tokenPairs(col("text"))): _*)
       .select(col("doc_id") +: carry.map(col) :+
         col("prev").as("w1") :+ col("term").as("w2"): _*)
-  }
 
   def ngramNovelty(docs: DataFrame): DataFrame = {
     val big = bigramStream(docs, carry = Seq("source"))
@@ -598,37 +601,18 @@ object TextOps extends graft.QueryModule {
     * array (zero exchanges — [[bigramStream]]); the model tables
     * derive from the SAME stream (two grouped
     * aggregates) and join back on their own keys — token-stream-sized
-    * equi-joins on (prev, term) / (prev), the shape AQE re-plans
+    * equi-joins on (w1, w2) / (w1), the shape AQE re-plans
     * freely; only the one-row V total touches the driver. At 100 TB
     * the bigram key would be hash32'd before the shuffles.
     */
-  /** (doc_id, prev, term) — the adjacent-token bigram stream, built
-    * per-row by the native [[graft.functions.TokenPairs]] kernel (r17):
-    * the lag() window the original form used shuffled and sorted the
-    * whole token stream once per consumer; the r16 HOF rewrite
-    * (indexed transform + get) removed the exchange but ran through
-    * the lambda interpreter per element and roughly cancelled the win
-    * (q_bigram_nll 0.92×). The kernel keeps zero exchanges AND enters
-    * whole-stage codegen — one tight JVM loop per document (the
-    * [[graft.functions.TokenSpans]] precedent, n = 2 with struct
-    * halves). spreadSmall parallelizes the per-doc kernel when the
-    * corpus scans as one task; production scans pass through.
-    */
-  private def bigramStream(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
-    graft.core.Tables.spreadSmall(docs, "doc_id")
-      .select(col("doc_id"),
-        inline(call_function("token_pairs", col("text"))))
-  }
-
   def bigramNll(docs: DataFrame): DataFrame = {
     val big = bigramStream(docs)
     val v = TfIdf.tokens(docs).select("term").distinct().count().toDouble
-    val c2 = big.groupBy("prev", "term").agg(count(lit(1)).as("c2"))
-    val c1 = big.groupBy("prev").agg(count(lit(1)).as("c1"))
+    val c2 = big.groupBy("w1", "w2").agg(count(lit(1)).as("c2"))
+    val c1 = big.groupBy("w1").agg(count(lit(1)).as("c1"))
     big
-      .join(c2, Seq("prev", "term"))
-      .join(c1, Seq("prev"))
+      .join(c2, Seq("w1", "w2"))
+      .join(c1, Seq("w1"))
       .select(col("doc_id"),
         (-log((col("c2").cast("double") + lit(1.0)) /
           (col("c1").cast("double") + lit(v))))
@@ -662,20 +646,20 @@ object TextOps extends graft.QueryModule {
     */
   def knBigramNll(docs: DataFrame, discount: Double = 0.75): DataFrame = {
     val big = bigramStream(docs)
-    val c2 = big.groupBy("prev", "term").agg(count(lit(1)).as("c2"))
+    val c2 = big.groupBy("w1", "w2").agg(count(lit(1)).as("c2"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // c1 and the left-diversity N₁₊(v,·) fall out of ONE aggregate of
     // c2 (vocab²-bounded, tiny next to the token stream); same for the
     // continuation counts N₁₊(·,w).
-    val c1 = c2.groupBy("prev")
+    val c1 = c2.groupBy("w1")
       .agg(sum(col("c2")).as("c1"), count(lit(1)).as("n1p_fwd"))
-    val cont = c2.groupBy("term").agg(count(lit(1)).as("n1p_bwd"))
+    val cont = c2.groupBy("w2").agg(count(lit(1)).as("n1p_bwd"))
     val t = c2.count().toDouble // total distinct bigram types (scalar)
     val d = lit(discount)
     val out = big
-      .join(c2, Seq("prev", "term"))
-      .join(c1, Seq("prev"))
-      .join(cont, Seq("term"))
+      .join(c2, Seq("w1", "w2"))
+      .join(c1, Seq("w1"))
+      .join(cont, Seq("w2"))
       .select(col("doc_id"),
         (-log(
           greatest(col("c2").cast("double") - d, lit(0.0)) / col("c1").cast("double")
@@ -2070,7 +2054,8 @@ object TextOps extends graft.QueryModule {
            |    + (CAST(n_types AS DOUBLE) / n_tokens) * 0.3
            |    + (1.0 - CAST(n_stop AS DOUBLE) / n_tokens) * 0.4 AS quality
            |FROM stats ORDER BY doc_id""".stripMargin,
-      // adjacency bigrams + the engine-wide md5 split; novelty = test
+      // adjacent non-empty tokens (lag over the filtered stream, as in
+      // q_bigram_nll) + the engine-wide md5 split; novelty = test
       // occurrences whose type the train half never produced
       "q_ngram_novelty" ->
         s"""WITH tokp AS (
@@ -2080,9 +2065,10 @@ object TextOps extends graft.QueryModule {
            |    FROM documents) z
            |  WHERE term <> ''),
            |big AS MATERIALIZED (
-           |  SELECT a.doc_id, a.source, a.term AS w1, b.term AS w2
-           |  FROM tokp a JOIN tokp b
-           |    ON a.doc_id = b.doc_id AND b.pos = a.pos + 1),
+           |  SELECT doc_id, source, w1, w2 FROM (
+           |    SELECT doc_id, source, term AS w2,
+           |      lag(term, 1) OVER (PARTITION BY doc_id ORDER BY pos) AS w1
+           |    FROM tokp) b WHERE w1 IS NOT NULL),
            |train_types AS (
            |  SELECT DISTINCT w1, w2 FROM big
            |  WHERE ${hashBucketSql("doc_id")} < 50),

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Kernels
 
 import graft.core.Tables
 
@@ -37,7 +38,7 @@ object VectorOps extends graft.QueryModule {
     * in Dedup.q_embedding_neardup, so results are bit-identical).
     */
   private def cosRounded(a: String, b: String): Column =
-    round(call_function("array_cosine", col(s"${a}_v"), col(s"${b}_v")), 6)
+    round(Kernels.arrayCosine(col(s"${a}_v"), col(s"${b}_v")), 6)
 
   /** DuckDB cosine between list columns `a` and `b` (1-based lists). */
   private[ops] def cosSql(a: String, b: String): String =
@@ -53,7 +54,6 @@ object VectorOps extends graft.QueryModule {
     * O(queries × corpus) — the recall baseline for the ANN path.
     */
   def knn(embeddings: DataFrame, queryPred: Column, k: Int = 10): DataFrame = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     val q = castVec(embeddings.filter(queryPred), "qid")
     val c = castVec(embeddings, "vid")
     val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("vid"))
@@ -108,7 +108,6 @@ object VectorOps extends graft.QueryModule {
     */
   def rpKnn(embeddings: DataFrame, queryPred: Column,
       dims: Int = 16, k: Int = 10): DataFrame = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     val p = randomProjection(embeddings, dims)
     val q = p.filter(queryPred)
       .select(col("vec_id").as("qid"), col("rp_v").as("qid_v"))
@@ -134,7 +133,6 @@ object VectorOps extends graft.QueryModule {
     * the C×L cluster-label table — free at any corpus size.
     */
   def clusterPurity(embeddings: DataFrame, nCentroids: Int = 8): DataFrame = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     val cent = pqTrain(embeddings, 1, nCentroids, 2, 64)
       .select(col("cid"), col("cw").as("cid_v"))
     val e = castVec(embeddings, "vid")
@@ -196,7 +194,6 @@ object VectorOps extends graft.QueryModule {
     * (qid, vid, cos) candidate stream).
     */
   def hardNegatives(embeddings: DataFrame, queryPred: Column, k: Int = 10): DataFrame = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     val q = embeddings.filter(queryPred)
       .select(col("vec_id").as("qid"),
         col("embedding").cast("array<double>").as("qid_v"),
@@ -270,7 +267,6 @@ object VectorOps extends graft.QueryModule {
     * negative come from the same broadcast-join pass, never two.
     */
   def contrastiveTriplets(embeddings: DataFrame, queryPred: Column): DataFrame = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     val q = embeddings.filter(queryPred)
       .select(col("vec_id").as("qid"),
         col("embedding").cast("array<double>").as("qid_v"),
@@ -333,7 +329,7 @@ object VectorOps extends graft.QueryModule {
     // separate predates the native lsh_sign_word kernel.
     val bands = e.select(col("vec_id"),
       posexplode(array((0 until nBands).map(b =>
-        lshBucketCol(col("v"), planesPerBand, dims, b * planesPerBand)): _*))
+        Kernels.lshSignWord(col("v"), planesPerBand, dims, b * planesPerBand)): _*))
         .as(Seq("band", "bkt")))
     // Edge generation in ONE pass and ONE exchange (r16, guide §2.4):
     // both edge directions explode inline off the banded join output
@@ -434,7 +430,6 @@ object VectorOps extends graft.QueryModule {
   def labelPropagationWeighted(embeddings: DataFrame, planesPerBand: Int = 4,
       nBands: Int = 4, dims: Int = 64, iters: Int = 3,
       seedMod: Int = 5): DataFrame = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     val e = embeddings
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -450,7 +445,7 @@ object VectorOps extends graft.QueryModule {
     // carried through for the fused scoring — see [[labelPropagation]]
     val bands = e.select(col("vec_id"),
       posexplode(array((0 until nBands).map(b =>
-        lshBucketCol(col("v"), planesPerBand, dims, b * planesPerBand)): _*))
+        Kernels.lshSignWord(col("v"), planesPerBand, dims, b * planesPerBand)): _*))
         .as(Seq("band", "bkt")),
       col("v"))
     // one banded-join pass, both edge directions exploded inline, ONE
@@ -462,7 +457,7 @@ object VectorOps extends graft.QueryModule {
           col("x.vec_id") < col("y.vec_id"))
       .select(col("x.vec_id").as("v1"), col("y.vec_id").as("v2"),
         floor(greatest(
-            round(call_function("array_cosine", col("x.v"), col("y.v")), 6),
+            round(Kernels.arrayCosine(col("x.v"), col("y.v")), 6),
             lit(0.0)) * lit(1e6) + lit(0.5)).cast("long").as("wq"))
       .select(explode(array(
         struct(col("v1").as("src"), col("v2").as("dst"), col("wq")),
@@ -546,7 +541,7 @@ object VectorOps extends graft.QueryModule {
         graft.text.Shingles.hash32(concat(lit("occ:"), col("vec_id").cast("string")))
           % 100 < samplePct)
     val words = e.select(col("vec_id"),
-      lshBucketCol(col("v"), nBands * pMax, dims, 0).as("w"))
+      Kernels.lshSignWord(col("v"), nBands * pMax, dims, 0).as("w"))
       .localCheckpoint(true) // the ONE corpus-width pass
     // ONE two-level aggregate over the union of every (setting, band)
     // branch (r16): the per-setting map used to build |settings|
@@ -667,7 +662,6 @@ object VectorOps extends graft.QueryModule {
     */
   private[graft] def ivfSearchLazy(embeddings: DataFrame, queryPred: Column,
       centroids: DataFrame, k: Int, nprobe: Int): (DataFrame, DataFrame) = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     val cent = centroids.select(col("cid"), col("cid_v"))
     val all  = castVec(embeddings, "vid")
     val wAssign = Window.partitionBy("vid").orderBy(col("ccos").desc, col("cid"))
@@ -720,33 +714,10 @@ object VectorOps extends graft.QueryModule {
   private[ops] def lshPlaneWeight(plane: Int, dim: Int): Double =
     graft.functions.LshSignWord.planeWeight(plane, dim)
 
-  /** Sign-bit bucket word for vector column `v` over planes
-    * [planeOffset, planeOffset + nPlanes): per plane, a left-folded
-    * dot-product chain in a fixed element order, so the sign decision —
-    * and therefore the bucket — is bit-identical to the SQL oracle's.
-    * `planeOffset` selects an independent plane set per LSH band.
-    * Shared by [[lshSearch]] and [[Dedup.embeddingNearDupLsh]].
-    *
-    * Native since r16 ([[graft.functions.LshSignWord]]): the
-    * compositional form was nPlanes × dims element_at·weight nodes —
-    * 2048 per 32-plane word — which Catalyst re-optimized on every
-    * execution; the r16 job census put q_lsh_occupancy at 0.9 s of
-    * task time inside a multi-second wall, all driver-side tree work.
-    * Same weights, same fold order, same null/ANSI semantics, so every
-    * bucket (and every declared hash) is unchanged.
-    */
-  private[graft] def lshBucketCol(v: Column, nPlanes: Int = 8, dims: Int = 64,
-      planeOffset: Int = 0): Column = {
-    graft.functions.GraftFunctions.register(
-      org.apache.spark.sql.SparkSession.active)
-    call_function("lsh_sign_word", v, lit(nPlanes), lit(dims), lit(planeOffset))
-  }
-
   def lshSearch(embeddings: DataFrame, queryPred: Column,
       nPlanes: Int = 8, dims: Int = 64, k: Int = 5): DataFrame = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     val all = castVec(embeddings, "vid")
-    val signed = all.withColumn("bucket", lshBucketCol(col("vid_v"), nPlanes, dims))
+    val signed = all.withColumn("bucket", Kernels.lshSignWord(col("vid_v"), nPlanes, dims, 0))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val queries = signed.filter(queryPred)
       .select(col("vid").as("qid"), col("vid_v").as("qid_v"), col("bucket"))
@@ -779,9 +750,8 @@ object VectorOps extends graft.QueryModule {
     */
   def lshMultiProbe(embeddings: DataFrame, queryPred: Column,
       nPlanes: Int = 8, dims: Int = 64, k: Int = 5): DataFrame = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     val all = castVec(embeddings, "vid")
-    val signed = all.withColumn("bucket", lshBucketCol(col("vid_v"), nPlanes, dims))
+    val signed = all.withColumn("bucket", Kernels.lshSignWord(col("vid_v"), nPlanes, dims, 0))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val probes = signed.filter(queryPred)
       .select(col("vid").as("qid"), col("vid_v").as("qid_v"),
@@ -835,7 +805,6 @@ object VectorOps extends graft.QueryModule {
     */
   def quantizedKnn(embeddings: DataFrame, queryPred: Column, k: Int = 10,
       dims: Int = 64): DataFrame = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     val q = quantizeInt8(embeddings.filter(queryPred), dims)
       .select(col("vid").as("qid"), col("scale").as("qs"), col("qv").as("q_qv"))
     val c = quantizeInt8(embeddings, dims)
@@ -843,7 +812,7 @@ object VectorOps extends graft.QueryModule {
     val w = Window.partitionBy("qid").orderBy(col("score").desc, col("vid"))
     broadcast(q).join(c, col("qid") =!= col("vid"))
       .select(col("qid"), col("vid"), col("qs"), col("cs"),
-        call_function("array_dot_long", col("q_qv"), col("c_qv")).as("qdot"))
+        Kernels.arrayDotLong(col("q_qv"), col("c_qv")).as("qdot"))
       .select(col("qid"), col("vid"), col("qdot"),
         (col("qdot").cast("double") * col("qs") * col("cs")).as("score"))
       .withColumn("rank", row_number().over(w))
@@ -886,7 +855,6 @@ object VectorOps extends graft.QueryModule {
   def pqSearch(embeddings: DataFrame, queryPred: Column, m: Int = 8,
       ksub: Int = 16, k: Int = 10, dims: Int = 64,
       codebook: Option[DataFrame] = None): DataFrame = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     val sub = dims / m
     require(sub * m == dims, s"dims $dims not divisible into $m subspaces")
     // Literal-inlining budget (r14 ADVICE): the encode projection holds
@@ -957,7 +925,7 @@ object VectorOps extends graft.QueryModule {
     codes
       .join(broadcast(lut), col("qid") =!= col("vid"))
       .select(col("qid"), col("vid"),
-        (call_function("adc_score_long", col("codes"), col("lut"))
+        (Kernels.adcScoreLong(col("codes"), col("lut"))
           .cast("double") / lit(GRID)).as("score"))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
@@ -1990,7 +1958,6 @@ object VectorOps extends graft.QueryModule {
     */
   def ivfPqSearchServed(index: IvfPqIndex, queries: DataFrame,
       queryPred: Column, k: Int = 10, nprobe: Int = 1): DataFrame = {
-    graft.functions.GraftFunctions.register(queries.sparkSession)
     // the SHARED coarse-scoring block, not an inline copy: the
     // served-vs-trained bit-identity contract (IndexServeSpec) rests
     // on coarse assignment being expression-identical everywhere
@@ -2108,7 +2075,7 @@ object VectorOps extends graft.QueryModule {
     val wA = Window.partitionBy("vid").orderBy(col("ccos").desc, col("ccid"))
     e.join(broadcast(cent), lit(true))
       .select(col("vid"), col("vid_v"), col("ccid"), col("c_v"),
-        round(call_function("array_cosine", col("vid_v"), col("c_v")), 6).as("ccos"))
+        round(Kernels.arrayCosine(col("vid_v"), col("c_v")), 6).as("ccos"))
       .withColumn("rn", row_number().over(wA))
   }
 
@@ -2143,7 +2110,6 @@ object VectorOps extends graft.QueryModule {
   }
 
   def encodeWithIndex(index: IvfPqIndex, batch: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(batch.sparkSession)
     val assigned = coarseScored(castVec(batch, "vid"), index.centroids)
       .filter(col("rn") === 1)
       .select(col("vid"), col("vid_v"), col("ccid").as("cell"), col("c_v"))
@@ -2433,7 +2399,6 @@ object VectorOps extends graft.QueryModule {
   private def ivfPqBuildFrom(embeddings: DataFrame, cent: DataFrame,
       m: Int, ksub: Int, dims: Int)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     val sub = dims / m
     require(sub * m == dims, s"dims $dims not divisible into $m subspaces")
     val e = castVec(embeddings, "vid")
@@ -2495,7 +2460,7 @@ object VectorOps extends graft.QueryModule {
       .join(broadcast(lut),
         col("qid") =!= col("vid") && codes("cell") === lut("cell"))
       .select(col("qid"), codes("cell").as("cell"), col("vid"),
-        ((call_function("adc_score_long", col("codes"), col("lut")) + col("qcq"))
+        ((Kernels.adcScoreLong(col("codes"), col("lut")) + col("qcq"))
           .cast("double") / lit(GRID)).as("score"))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
@@ -2520,7 +2485,6 @@ object VectorOps extends graft.QueryModule {
     * and assign the full corpus once with the final centroids.
     */
   def kmeans(embeddings: DataFrame, k: Int = 8, iters: Int = 5): DataFrame = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     val e = castVec(embeddings, "vid")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     var cent = e.filter(col("vid") < k)
@@ -2544,7 +2508,7 @@ object VectorOps extends graft.QueryModule {
     val wAssign = Window.partitionBy("vid").orderBy(col("ccos").desc, col("cid"))
     val assigned = e.join(broadcast(cent), lit(true))
       .select(col("vid"), col("vid_v"), col("cid"),
-        call_function("array_cosine", col("vid_v"), col("cid_v")).as("ccos"))
+        Kernels.arrayCosine(col("vid_v"), col("cid_v")).as("ccos"))
       .withColumn("rn", row_number().over(wAssign))
       .filter(col("rn") === 1)
     // per-dimension mean: explode to (cluster, dim, value), aggregate,
@@ -2575,7 +2539,6 @@ object VectorOps extends graft.QueryModule {
     * pass + a cell-keyed aggregate.
     */
   def ivfCellShares(embeddings: DataFrame, centroids: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     val all = castVec(embeddings, "vid")
     val wAssign = Window.partitionBy("vid")
       .orderBy(col("ccos").desc, col("cid"))
@@ -2616,7 +2579,6 @@ object VectorOps extends graft.QueryModule {
     */
   def ivfBalanceCells(embeddings: DataFrame, cent0: DataFrame,
       maxShare: Double = 0.5, maxSplits: Int = 2): DataFrame = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     val e = castVec(embeddings, "vid")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     var cent = cent0.select(col("cid"), col("cid_v")).localCheckpoint(true)
@@ -2799,11 +2761,10 @@ object VectorOps extends graft.QueryModule {
     * clustering quality metric (higher is tighter).
     */
   def assignmentQuality(embeddings: DataFrame, centroids: DataFrame): Double = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     val e = castVec(embeddings, "vid")
     e.join(broadcast(centroids), lit(true))
       .select(col("vid"),
-        call_function("array_cosine", col("vid_v"), col("cid_v")).as("ccos"))
+        Kernels.arrayCosine(col("vid_v"), col("cid_v")).as("ccos"))
       .groupBy("vid").agg(max(col("ccos")).as("best"))
       .agg(avg(col("best"))).head.getDouble(0)
   }

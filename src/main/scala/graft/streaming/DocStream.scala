@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Kernels
 import org.apache.spark.sql.types._
 
 import graft.ops.TextOps
@@ -118,7 +119,6 @@ object DocStream {
     * 0 instead of failing the lookup.
     */
   def scoreOnIngest(docs: DataFrame, model: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val toks = tokensCol
     docs.crossJoin(broadcast(model))
       .withColumn("toks", toks)
@@ -126,8 +126,7 @@ object DocStream {
       // doc) — the HOF fold below only does the map lookups, which a
       // ≤B-entry model map serves fine (one lookup per element)
       .withColumn("w_micro", aggregate(
-        call_function("hash32_buckets", col("toks"),
-          lit(graft.ops.Classify.B.toLong)),
+        Kernels.hash32Buckets(col("toks"), graft.ops.Classify.B.toLong),
         lit(0L),
         (acc, bk) => acc + coalesce(
           element_at(col("lam_micro"), bk), lit(0L))))
@@ -156,7 +155,6 @@ object DocStream {
     * sees it.
     */
   def classifyOnIngest(docs: DataFrame, model: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val toks = tokensCol
     docs.crossJoin(broadcast(model))
       .withColumn("toks", toks)
@@ -165,8 +163,7 @@ object DocStream {
       // as a transform() lambda it ran through the expression
       // interpreter (HOFs never codegen) — hash32_buckets does the
       // whole array in one tight loop
-      .withColumn("bks", call_function("hash32_buckets", col("toks"),
-        lit(graft.ops.Classify.B.toLong)))
+      .withColumn("bks", Kernels.hash32Buckets(col("toks"), graft.ops.Classify.B.toLong))
       // the model's lam is a DENSE array (slot = bucket·C + classIdx,
       // unseen slots pre-filled with the smoothing default), and the
       // whole n_tokens × C accumulation runs in ONE codegen'd pass
@@ -177,7 +174,7 @@ object DocStream {
       // per lookup (r10's measured 13×). Only the C-element argmax
       // stays interpreted — struct ordering pins the tie-break.
       .withColumn("sums",
-        call_function("nb_class_sums", col("bks"), col("lam"), col("n_classes")))
+        Kernels.nbClassSums(col("bks"), col("lam"), col("n_classes")))
       .withColumn("best",
         array_min(transform(sequence(lit(0), col("n_classes") - 1), i =>
           struct(
@@ -202,13 +199,11 @@ object DocStream {
     * (never 0/0 = NaN) instead of being absent.
     */
   def qualityOnIngest(docs: DataFrame, model: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val toks = tokensCol
     docs.crossJoin(broadcast(model))
       .withColumn("toks", toks)
       .withColumn("zw", aggregate(
-        call_function("hash32_buckets", col("toks"),
-          lit(graft.ops.Classify.B.toLong)),
+        Kernels.hash32Buckets(col("toks"), graft.ops.Classify.B.toLong),
         lit(0L), (acc, bk) => acc +
           coalesce(element_at(col("w_micro"), bk), lit(0L))))
       .withColumn("n_tokens", size(col("toks")).cast("long"))
@@ -243,7 +238,6 @@ object DocStream {
     * batch query, whose vocab join never sees it.
     */
   def tokenizeOnIngest(docs: DataFrame, model: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val toks = tokensCol
     docs.crossJoin(broadcast(model))
       .withColumn("toks", toks)
@@ -253,7 +247,7 @@ object DocStream {
       // loop — replaces the aggregate-of-aggregate HOF chain that ran
       // the lambda interpreter per rule per symbol per token
       .withColumn("subs", transform(col("toks"), t =>
-        call_function("bpe_encode_word", t, col("merges"))))
+        Kernels.bpeEncodeWord(t, col("merges"))))
       .select(col("doc_id"), col("source"),
         size(col("toks")).cast("long").as("n_tokens"),
         aggregate(col("subs"), lit(0L), (a, s) => a + size(s).cast("long"))

@@ -3,6 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Kernels
 
 /** Tokenization with positions, n-gram shingles, and a cross-engine
   * 32-bit string hash.
@@ -53,13 +54,12 @@ object Shingles {
     * the higher-order-function rewrite that first removed it ran
     * interpreted per element and measured 38% slower than the window
     * on the r16 10-query A/B. The kernel removes the exchange AND the
-    * interpreter: ShingleMicroProbe (same JVM, rotated order) measures
-    * it at 0.11 s vs the window's 0.60 s on the 8-token span stream,
-    * and the (pos, span) multiset is bit-identical to both prior forms
-    * (probe sanity hashes; 205/205 oracle green).
+    * interpreter: a same-JVM, rotated-order A/B measured it at 0.11 s
+    * vs the window's 0.60 s on the 8-token span stream
+    * (OPTIMIZATION_r16.md §1), and the (pos, span) multiset is
+    * bit-identical to both prior forms (205/205 oracle green).
     */
   def spansWithPos(docs: DataFrame, n: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     // spreadSmall: a bench-sized corpus scans as ONE task (row-group
     // granularity), so without the window's accidental exchange every
     // span/md5 would run single-threaded — spread the doc rows (cheap,
@@ -67,7 +67,7 @@ object Shingles {
     // parallelize itself; production-sized scans pass through unchanged
     graft.core.Tables.spreadSmall(docs, "doc_id")
       .select(col("doc_id"),
-        inline(call_function("token_spans", col("text"), lit(n))))
+        inline(Kernels.tokenSpans(col("text"), n)))
   }
 
   /** [[spansWithPos]] over an already-materialized (doc_id, pos, term)
@@ -122,9 +122,7 @@ object Shingles {
     * nibble-by-nibble. Input is cast to string, as md5 did implicitly;
     * on string input the optimizer drops the cast.
     */
-  def hash32(c: Column): Column =
-    graft.functions.ColShim.column(
-      graft.functions.Hash32(graft.functions.ColShim.expression(c.cast("string"))))
+  def hash32(c: Column): Column = Kernels.hash32(c.cast("string"))
 
   /** SQL mirror of [[hash32]] (DuckDB). ascii() is INT32 there, so each
     * nibble is cast to BIGINT before the power-of-16 multiply.

@@ -1,15 +1,15 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Kernels
 import org.scalatest.funsuite.AnyFunSuite
-
-import graft.functions.GraftFunctions
 
 class ArrayCosineSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
+  // the SQL-string checks run where the SQL name is installed
+  lazy val sqlSession = SparkTestSession.withGraftExtensions
 
   test("array_cosine equals the compositional aggregate/zip_with form on real embeddings") {
-    GraftFunctions.register(spark)
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     val pairs = e.as("a").join(e.as("b"),
@@ -19,15 +19,14 @@ class ArrayCosineSpec extends AnyFunSuite {
       (sqrt(aggregate(transform(col("a.v"), x => x * x), lit(0.0), (acc, x) => acc + x)) *
        sqrt(aggregate(transform(col("b.v"), x => x * x), lit(0.0), (acc, x) => acc + x)))
     val diff = pairs.select(
-        call_function("array_cosine", col("a.v"), col("b.v")).as("fused"),
+        Kernels.arrayCosine(col("a.v"), col("b.v")).as("fused"),
         composed.as("composed"))
       .select(max(abs(col("fused") - col("composed")))).collect().head.getDouble(0)
     assert(diff == 0.0, s"fused and composed cosine must be bit-identical, max diff $diff")
   }
 
   test("array_cosine known values and SQL registration") {
-    GraftFunctions.register(spark)
-    val r = spark.sql(
+    val r = sqlSession.sql(
       "SELECT array_cosine(array(1.0d, 0.0d), array(1.0d, 0.0d)) AS one, " +
       "array_cosine(array(1.0d, 0.0d), array(0.0d, 1.0d)) AS zero").collect().head
     assert(math.abs(r.getDouble(0) - 1.0) < 1e-15)
@@ -35,14 +34,12 @@ class ArrayCosineSpec extends AnyFunSuite {
   }
 
   test("array_cosine null propagation") {
-    GraftFunctions.register(spark)
-    val r = spark.sql("SELECT array_cosine(CAST(NULL AS ARRAY<DOUBLE>), array(1.0d))").collect().head
+    val r = sqlSession.sql("SELECT array_cosine(CAST(NULL AS ARRAY<DOUBLE>), array(1.0d))").collect().head
     assert(r.isNullAt(0))
   }
 
   test("array_cosine treats null ELEMENTS as zero (no NPE, consistent paths)") {
-    GraftFunctions.register(spark)
-    val r = spark.sql(
+    val r = sqlSession.sql(
       "SELECT array_cosine(array(1.0d, CAST(NULL AS DOUBLE)), array(1.0d, 5.0d)) AS c").collect().head
     // [1, 0]·[1, 5] / (1 * sqrt(26))
     assert(math.abs(r.getDouble(0) - 1.0 / math.sqrt(26.0)) < 1e-12)

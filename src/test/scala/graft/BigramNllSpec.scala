@@ -113,6 +113,19 @@ class BigramNllSpec extends AnyFunSuite {
       s"KN must favor the diverse continuation: ${kn(1L)} vs ${kn(2L)}")
   }
 
+  test("consecutive spaces: bigrams pair adjacent non-empty tokens") {
+    import spark.implicits._
+    // the oracles pair the filtered tokens with lag(term) over pos, so
+    // the empty token between the two spaces must not break (a, b)
+    val docs = Seq((1L, "web", "a  b c")).toDF("doc_id", "source", "text")
+    for (carry <- Seq(Nil, Seq("source"))) {
+      val pairs = TextOps.bigramStream(docs, carry)
+        .select("w1", "w2").collect().map(r => (r.getString(0), r.getString(1)))
+      assert(pairs.toSeq === Seq(("a", "b"), ("b", "c")), s"carry $carry")
+    }
+    assert(TextOps.bigramNll(docs).select("n_bigrams").head.getLong(0) === 2L)
+  }
+
   test("every multi-token document gets a row; bigram count = tokens - 1") {
     val docs = graft.core.Tables.documents(spark, "/root/testdata/sf0.001")
     val out = TextOps.bigramNll(docs)

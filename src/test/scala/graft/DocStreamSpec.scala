@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.graft.Kernels
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.DocStream
@@ -341,7 +342,6 @@ class DocStreamSpec extends AnyFunSuite {
       "null/out-of-range slots contributing zero") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     // C=3, B=4: lam slot (bucket*3 + class) = 10*(bucket+1) + class
     val lam = (0 until 12).map(s => 10L * (s / 3 + 1) + (s % 3))
     val df = Seq(
@@ -349,7 +349,7 @@ class DocStreamSpec extends AnyFunSuite {
       (2L, Seq.empty[Long]),      // tokenless: all-zero sums
       (3L, Seq(7L))               // out-of-range bucket: contributes 0
     ).toDF("id", "bks")
-      .withColumn("sums", call_function("nb_class_sums",
+      .withColumn("sums", Kernels.nbClassSums(
         col("bks"), typedLit(lam), lit(3)))
     val got = df.select("id", "sums").collect()
       .map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
@@ -527,19 +527,18 @@ class DocStreamSpec extends AnyFunSuite {
   test("hash32_buckets kernel is bit-identical to the hash32 transform chain") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val B = graft.ops.Classify.B.toLong
     val toks = graft.core.Tables.documents(spark, dir)
       .withColumn("toks", filter(split(col("text"), " "), t => t =!= ""))
     val diff = toks
-      .withColumn("a", call_function("hash32_buckets", col("toks"), lit(B)))
+      .withColumn("a", Kernels.hash32Buckets(col("toks"), B))
       .withColumn("b", transform(col("toks"), t =>
         graft.text.Shingles.hash32(t) % lit(B)))
       .filter(expr("a <> b")).count()
     assert(diff === 0L, "kernel diverged from the md5 transform chain")
     // null tokens map to null buckets, exactly like md5(null)
     val withNull = Seq(Seq[String]("x", null, "y")).toDF("toks")
-      .select(call_function("hash32_buckets", col("toks"), lit(B)).as("a"))
+      .select(Kernels.hash32Buckets(col("toks"), B).as("a"))
       .collect().head.getSeq[Any](0)
     assert(withNull(1) == null && withNull(0) != null && withNull(2) != null)
   }

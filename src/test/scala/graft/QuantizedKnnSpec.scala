@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Kernels
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.VectorOps
@@ -14,11 +15,10 @@ class QuantizedKnnSpec extends AnyFunSuite {
   private def emb = graft.core.Tables.embeddings(spark, dir)
 
   test("array_dot_long computes the exact integer dot product") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val got = Seq((Array(1L, -2L, 3L), Array(4L, 5L, -6L)))
       .toDF("a", "b")
-      .select(call_function("array_dot_long", col("a"), col("b")))
+      .select(Kernels.arrayDotLong(col("a"), col("b")))
       .head.getLong(0)
     assert(got === (4L - 10L - 18L))
   }

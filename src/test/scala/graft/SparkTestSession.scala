@@ -15,4 +15,26 @@ object SparkTestSession {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** A second session on the shared context whose only graft setup is
+    * `withExtensions(new GraftExtensions)` — the SQL install path.
+    * The equivalent `--conf spark.sql.extensions=graft.GraftExtensions`
+    * is a STATIC conf: it only applies when the SparkContext itself is
+    * created with it, which a test sharing a context can't do.
+    */
+  lazy val withGraftExtensions: SparkSession = {
+    val base = spark // ensure the shared context exists
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try {
+      SparkSession.builder()
+        .master("local[4]")
+        .withExtensions(new GraftExtensions)
+        .config("spark.sql.shuffle.partitions", "4")
+        .getOrCreate()
+    } finally {
+      SparkSession.setDefaultSession(base)
+      SparkSession.setActiveSession(base)
+    }
+  }
 }
