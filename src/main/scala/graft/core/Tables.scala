@@ -72,6 +72,18 @@ object Tables {
     else df
   }
 
+  /** Hash-partition the DOC rows by `doc_id` at the session's shuffle
+    * width, so every per-document pass downstream (a doc window, a
+    * (doc_id, …) aggregate) rides this one exchange of the raw rows
+    * instead of re-shuffling the token stream. The count is explicit
+    * (`spark.sql.shuffle.partitions`, the width every other exchange
+    * starts from): that makes the exchange REPARTITION_BY_NUM, which
+    * AQE never coalesces — a coalesced doc exchange on a small corpus
+    * runs every per-doc pass in one task.
+    */
+  def byDoc(docs: DataFrame): DataFrame =
+    docs.repartition(docs.sparkSession.sessionState.conf.numShufflePartitions, col("doc_id"))
+
   /** Coalesce a SMALL frame to one output partition before a write
     * (guide §6: aim for 128 MB – 1 GB output files, never one
     * near-empty file per shuffle partition): when the optimizer's

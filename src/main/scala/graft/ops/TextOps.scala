@@ -558,8 +558,9 @@ object TextOps extends graft.QueryModule {
     * Scale shape: each token computes its own chunk-membership range
     * arithmetically and explodes into ≤ ⌈size/stride⌉ = 2 rows (no
     * range join, no per-doc loop); one (doc, chunk) aggregate builds
-    * the outputs. The only window is the per-doc token count riding
-    * the same doc-keyed exchange the aggregate needs anyway.
+    * the outputs. The per-doc token count window and that aggregate
+    * both ride one exchange of the raw doc rows (`Tables.byDoc`), so
+    * the token stream is never shuffled.
     */
   def chunkWithOverlap(docs: DataFrame, size: Int = 64, overlap: Int = 16): DataFrame = {
     require(overlap < size, s"overlap $overlap must be < size $size")
@@ -573,7 +574,7 @@ object TextOps extends graft.QueryModule {
         .otherwise(floor((col("n") - size + t - 1) / lit(t.toDouble)) + 1)
     val ciLo = greatest(lit(0L), floor((col("pos") - size + t - 1) / lit(t.toDouble)))
     val ciHi = least(floor((col("pos") - 1) / lit(t.toDouble)), col("n_chunks") - 1)
-    graft.text.Shingles.tokensWithPos(docs)
+    Shingles.tokensWithPos(Tables.byDoc(docs))
       .withColumn("n", n)
       .withColumn("n_chunks", nChunks)
       .select(col("doc_id"), col("pos"), col("term"),

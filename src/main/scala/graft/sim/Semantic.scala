@@ -42,8 +42,6 @@ object Semantic {
       .headOption.map(_.getString(0))
       .getOrElse("")
 
-  def defaultQueryTerm(docs: DataFrame): String = queryTermFrom(TfIdf.tfidf(docs))
-
   /** Top-k terms most similar to `query`, computing and caching the
     * TF-IDF table internally. The top-k result (k rows) is eagerly
     * materialized so the TF-IDF working cache can be dropped before

@@ -1,8 +1,10 @@
 package graft.tfidf
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.core.Tables
 
 /** TF-IDF over a corpus DataFrame, Spark-native.
   *
@@ -17,8 +19,11 @@ import org.apache.spark.sql.functions._
   * The reference computes the two "fan-back" steps (per-doc totals,
   * document frequency) by collecting to the driver and looping
   * (app.py:29-40, 47-57). Here both are window aggregates, so nothing
-  * ever materializes on the driver and the pipeline is three shuffles
-  * total (counts, window-by-doc, window-by-term) at any scale.
+  * ever materializes on the driver and the pipeline is two shuffles
+  * total at any scale: the raw doc rows by doc_id (the (doc, term)
+  * counts and the per-doc window both ride it), then the counts by
+  * term. The doc exchange has an explicit width (`Tables.byDoc`) so AQE
+  * cannot coalesce it into one task on a small corpus.
   *
   * Deliberate divergence (FIXTURES.md A.3): empty/blank documents are
   * dropped from the token stream instead of crashing; they still count
@@ -46,15 +51,18 @@ object TfIdf {
     *
     * Window-by-term runs last so the output is hash(term)-partitioned:
     * the downstream cosine aggregation (groupBy term) reuses that
-    * partitioning with no extra exchange.
+    * partitioning with no extra exchange. Its rows are sorted by
+    * (term, doc_id), so every per-term sum downstream adds in the same
+    * order at any partition count.
     *
     * @param m corpus row count (reference semantics app.py:125); pass it
     *          in so callers can reuse a cached count.
     */
   def tfidf(docs: DataFrame, m: Long): DataFrame = {
     val byDoc  = Window.partitionBy("doc_id")
-    val byTerm = Window.partitionBy("term")
-    termCounts(docs)
+    val byTerm = Window.partitionBy("term").orderBy("doc_id")
+      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    termCounts(Tables.byDoc(docs))
       .withColumn("doc_total", sum("cnt").over(byDoc))
       .withColumn("df", count(lit(1)).over(byTerm))
       .withColumn(

@@ -96,6 +96,39 @@ class GoldenFixtureSpec extends AnyFunSuite {
     assert(a == b)
   }
 
+  test("determinism: the tf table and raw similarities are identical at 1, 3 and 4 " +
+      "shuffle partitions (seeded corpus with duplicate doc ids)") {
+    val rnd = new scala.util.Random(20261018L)
+    val vocab = (0 until 40).map(i => s"t$i")
+    // 300 lines over 240 ids; a squared uniform skews terms toward t0
+    val lines = (0 until 300).map { i =>
+      s"d${i % 240}" -> Seq.fill(3 + rnd.nextInt(28))(
+        vocab((math.pow(rnd.nextDouble(), 2) * vocab.size).toInt)).mkString(" ")
+    }
+    val docs = corpus(lines: _*)
+    val queries = Seq("t0", "t3", "t17")
+    def run(): (Seq[String], Seq[Seq[(String, Double)]]) = {
+      val tf = TfIdf.tfidf(docs).collect().map(_.toString).sorted.toSeq
+      val sims = queries.map(q => Semantic.relatedTerms(docs, q, k = 10, roundDigits = -1)
+        .collect().map(r => (r.getString(0), r.getDouble(1))).toSeq)
+      (tf, sims)
+    }
+    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.coalescePartitions.enabled")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    try {
+      spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+      val outs = Seq(1, 3, 4).map { n =>
+        spark.conf.set("spark.sql.shuffle.partitions", n.toString)
+        run()
+      }
+      assert(outs.head._1.length > 1000 && outs.head._2.forall(_.length == 10))
+      outs.tail.foreach(o => assert(o == outs.head))
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   test("tfidf table shape: one row per (doc, term), df and totals correct") {
     val tf = TfIdf.tfidf(golden).collect()
     assert(tf.length == 14)

@@ -1,5 +1,10 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeLike, ShuffleOrigin}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-shape regression tests: the PERF.md plan audit as assertions,
@@ -19,18 +24,26 @@ class PlanSpec extends AnyFunSuite {
     try body finally sc.clearJobGroup()
   }
 
-  /** Shuffle exchanges in an executed plan, stopping at cached-table
-    * scans (the cached table's own build plan is not this query's). */
-  private def shuffles(p: org.apache.spark.sql.execution.SparkPlan): Int = {
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    p match {
-      case a: AdaptiveSparkPlanExec => shuffles(a.executedPlan)
-      case s: QueryStageExec => shuffles(s.plan)
-      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike =>
-        1 + e.children.map(shuffles).sum
-      case other => other.children.map(shuffles).sum
-    }
+  /** Shuffle exchanges in an executed plan, root first, stopping at
+    * cached-table scans (the cached table's own build plan is not this
+    * query's). */
+  private def exchanges(p: SparkPlan): Seq[ShuffleExchangeLike] = p match {
+    case a: AdaptiveSparkPlanExec => exchanges(a.executedPlan)
+    case s: QueryStageExec => exchanges(s.plan)
+    case e: ShuffleExchangeLike => e +: e.children.flatMap(exchanges)
+    case other => other.children.flatMap(exchanges)
   }
+
+  private def shuffles(p: SparkPlan): Int = exchanges(p).length
+
+  /** (origin, hash keys, partition count) of a hash-partitioned exchange. */
+  private def hashShape(e: ShuffleExchangeLike): (ShuffleOrigin, Seq[String], Int) =
+    e.outputPartitioning match {
+      case h: HashPartitioning =>
+        (e.shuffleOrigin, h.expressions.map { case a: Attribute => a.name; case x => x.sql },
+          h.numPartitions)
+      case other => fail(s"not a hash exchange: $other")
+    }
 
   /** Jobs run under `group`. The status tracker is fed by the listener
     * bus, in event order: once a marker job submitted afterwards shows
@@ -109,6 +122,28 @@ class PlanSpec extends AnyFunSuite {
       assert(shuffles(p) === 0, p)
       assert(p.toString.contains("BroadcastExchange"), p)
     } finally tf.unpersist(false)
+  }
+
+  test("tf-idf build: two exchanges — the doc rows by doc_id at the full shuffle width, " +
+      "then the counts by term; never the token stream by (doc_id, term)") {
+    val docs = graft.core.Tables.documents(spark, dir)
+    // the plan callers persist, run to its final adaptive form
+    val tf = graft.tfidf.TfIdf.tfidf(docs)
+    tf.collect()
+    val built = tf.queryExecution.executedPlan
+    val shapes = exchanges(built).map(hashShape)
+    assert(shapes.map(_._2) === Seq(Seq("term"), Seq("doc_id")), built)
+    assert(shapes.last ===
+      ((REPARTITION_BY_NUM, Seq("doc_id"), spark.sessionState.conf.numShufflePartitions)), built)
+  }
+
+  test("chunkWithOverlap: the doc window and the (doc_id, chunk_idx) aggregate " +
+      "ride one exchange of the doc rows") {
+    val out = graft.ops.TextOps.chunkWithOverlap(graft.core.Tables.documents(spark, dir), 64, 16)
+    out.collect()
+    val p = out.queryExecution.executedPlan
+    assert(exchanges(p).map(hashShape) ===
+      Seq((REPARTITION_BY_NUM, Seq("doc_id"), spark.sessionState.conf.numShufflePartitions)), p)
   }
 
   test("q_window_topn gets the WindowGroupLimit pushdown for rn <= 3") {

@@ -16,7 +16,7 @@ class TypedSpec extends AnyFunSuite {
 
   test("typed relatedTerms returns TermScore rows matching the untyped query") {
     val docs = Typed.documents(spark, dir)
-    val q = graft.sim.Semantic.defaultQueryTerm(docs.toDF())
+    val q = graft.sim.Semantic.queryTermFrom(graft.tfidf.TfIdf.tfidf(docs.toDF()))
     val typed = Typed.relatedTerms(docs, q, k = 5).collect()
     assert(typed.length == 5)
     assert(typed.forall(t => t.sim > 0 && t.sim <= 1.0 + 1e-9))
