@@ -1563,7 +1563,10 @@ object Dedup extends graft.QueryModule {
     // stale base would resurrect deleted memberships)
     requireNoParks(spark, sigsRoot, "clustersIngestBatch")
     requireNoParks(spark, assignRoot, "clustersIngestBatch")
-    pendingTombstones(spark, stateDir).foreach(t =>
+    // ONE tombstone read (one schema-inference job) feeds both this
+    // gate and the deleted-doc filter below
+    val tombsOpt = pendingTombstones(spark, stateDir)
+    tombsOpt.foreach(t =>
       requireAssignmentsHealed(spark, stateDir, t, "clustersIngestBatch",
         overwrites = Some(id)))
     // a batch may REDELIVER (or a source keep emitting) a doc deleted
@@ -1574,7 +1577,7 @@ object Dedup extends graft.QueryModule {
     // deliberate re-admission). Derived ONCE per batch (materialized —
     // it is takedown-sized) and threaded through both the batch sketch
     // and the history read below.
-    val delOpt = deletedDocs(spark, stateDir).map(_.localCheckpoint(true))
+    val delOpt = deletedDocs(spark, stateDir, tombsOpt).map(_.localCheckpoint(true))
     val delFits = delOpt.forall(_.count() <= DeletedBroadcastRows)
     def dropDeleted(df: DataFrame): DataFrame =
       delOpt.fold(df)(t => gatedJoin(df, t, "doc_id", "left_anti", delFits))
@@ -2040,11 +2043,13 @@ object Dedup extends graft.QueryModule {
   /** (pending tombstones ∪ deletion log) — THE deleted-doc filter
     * every consumer shares: one definition so the ingest sketch, the
     * store reads, and the candidate paths can never silently diverge
-    * on which docs count as deleted.
+    * on which docs count as deleted. `tombs` is the state's
+    * [[pendingTombstones]], passed in so a caller that already read
+    * them does not read them twice.
     */
-  private def deletedDocs(spark: SparkSession,
-      stateDir: String): Option[DataFrame] =
-    (pendingTombstones(spark, stateDir), deletionLogDocs(spark, stateDir)) match {
+  private def deletedDocs(spark: SparkSession, stateDir: String,
+      tombs: Option[DataFrame]): Option[DataFrame] =
+    (tombs, deletionLogDocs(spark, stateDir)) match {
       case (Some(t), Some(l)) => Some(t.unionByName(l).distinct())
       case (t, l) => t.orElse(l)
     }
@@ -2179,7 +2184,7 @@ object Dedup extends graft.QueryModule {
   def readSignatureStoreState(spark: SparkSession, stateDir: String,
       beforeId: Option[Long] = None): DataFrame =
     readSignatureStoreStateWith(spark, stateDir, beforeId,
-      deletedDocs(spark, stateDir))
+      deletedDocs(spark, stateDir, pendingTombstones(spark, stateDir)))
 
   /** [[readSignatureStoreState]] with a PRECOMPUTED deleted-doc filter
     * — the per-micro-batch path derives the filter once and threads it

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Distributed connected components by iterative min-label propagation.
@@ -91,10 +91,36 @@ object Graph {
     * order-insensitive edge-set checksum (exact set compare would cost
     * two anti-joins per round; a 64-bit-sum collision across rounds of
     * the same shrinking computation is not a practical concern).
+    *
+    * Size-adaptive: the first step collects at most `budget + 1` edges,
+    * `budget` = `spark.sql.autoBroadcastJoinThreshold` / 16 (16 bytes
+    * per (long, long) edge; 655,360 edges at the default 10 MiB). An
+    * edge list that fits is solved on the driver by a union-find that
+    * always keeps the smaller root, and returned as a local frame with
+    * the distributed path's exact schema and rows — one Spark job
+    * instead of several per contraction round. The gate reads the
+    * broadcast threshold because a frame that small is one Spark
+    * already ships through the driver for a broadcast join; a
+    * threshold ≤ 0 disables broadcasts and so forces the distributed
+    * path. `maxIter` binds only the distributed path: the driver path
+    * always runs to the fixpoint.
     */
   def connectedComponentsStar(edges: DataFrame, maxIter: Int = 50): DataFrame = {
     val spark = edges.sparkSession
     import org.apache.spark.sql.expressions.Window
+
+    // fixpoint: depth-1 stars (child, center); centers label themselves.
+    // Union the original node set so nodes whose only edges were
+    // self-loops (dropped before iterating) keep the same
+    // node-appears-iff-in-an-edge contract as connectedComponents.
+    def assemble(stars: DataFrame): DataFrame = {
+      val nodes = edges.select(col("src").as("node"))
+        .union(edges.select(col("dst").as("node")))
+      stars.select(col("src").as("node"), col("dst").as("label"))
+        .union(stars.select(col("dst").as("node"), col("dst").as("label")))
+        .union(nodes.select(col("node"), col("node").as("label")))
+        .groupBy("node").agg(min("label").as("label"))
+    }
 
     def largeStar(e: DataFrame): DataFrame = {
       val sym = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
@@ -127,12 +153,28 @@ object Graph {
       Option(e.agg(sum(xxhash64(col("src"), col("dst")).cast("decimal(38,0)")))
         .head.getDecimal(0))
 
+    val pairs = edges.select(col("src"), col("dst"))
+    val loopFree = pairs.filter(col("src") =!= col("dst"))
+    val budget = math.min(spark.sessionState.conf.autoBroadcastJoinThreshold / 16,
+      Int.MaxValue - 1L).toInt
+    if (budget > 0) {
+      val local = pairs.limit(budget + 1).collect()
+      if (local.length <= budget) {
+        val solved = driverComponents(local)
+        // the schema the contraction would return: a round's window
+        // min makes `node` nullable, and a round runs iff some edge
+        // joins two distinct nodes (then some node's label differs)
+        val rounds = solved.exists(r => r.get(0) != r.get(1))
+        val shape = if (rounds) smallStar(largeStar(loopFree)) else loopFree
+        return spark.createDataFrame(java.util.Arrays.asList(solved: _*),
+          assemble(shape).schema)
+      }
+    }
+
     // checkpoints are LAZY (r17, job-count sweep): the checksum
     // aggregate is a full scan, so its job materializes the checkpoint
     // — one job per round instead of two
-    var cur = edges.select(col("src"), col("dst"))
-      .filter(col("src") =!= col("dst"))
-      .localCheckpoint(false)
+    var cur = loopFree.localCheckpoint(false)
     var prevOpt = checksum(cur)
     var it = 0
     var done = prevOpt.isEmpty
@@ -144,16 +186,33 @@ object Graph {
       prev = c
       it += 1
     }
-    // fixpoint: depth-1 stars (child, center); centers label themselves.
-    // Union the original node set so nodes whose only edges were
-    // self-loops (dropped before iterating) keep the same
-    // node-appears-iff-in-an-edge contract as connectedComponents.
-    val nodes = edges.select(col("src").as("node"))
-      .union(edges.select(col("dst").as("node")))
-    cur.select(col("src").as("node"), col("dst").as("label"))
-      .union(cur.select(col("dst").as("node"), col("dst").as("label")))
-      .union(nodes.select(col("node"), col("node").as("label")))
-      .groupBy("node").agg(min("label").as("label"))
+    assemble(cur)
+  }
+
+  /** (node, label) rows of [[connectedComponentsStar]] for collected
+    * (src, dst) rows, by union-find. Linking always under the smaller
+    * root keeps every root its component's minimum, so the root IS the
+    * label. A null endpoint joins nothing — the distributed path drops
+    * its edge and groups it as one (null, null) row.
+    */
+  private def driverComponents(rows: Array[Row]): Seq[Row] = {
+    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+    def find(x0: Long): Long = {
+      var x = x0
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    var sawNull = false
+    rows.foreach { r =>
+      val ends = Seq(0, 1).filterNot(r.isNullAt).map(r.getLong)
+      ends.foreach(n => parent.getOrElseUpdate(n, n))
+      if (ends.size == 2) {
+        val (a, b) = (find(ends(0)), find(ends(1)))
+        if (a < b) parent(b) = a else parent(a) = b
+      } else sawNull = true
+    }
+    parent.keys.toSeq.map(n => Row(n, find(n))) ++
+      (if (sawNull) Seq(Row(null, null)) else Nil)
   }
 
   /** Fixed-iteration PageRank over the undirected graph given as an

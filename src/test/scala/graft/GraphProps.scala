@@ -47,10 +47,23 @@ object GraphProps extends Properties("Graph") {
     got == unionFind(edges)
   }
 
-  property("large-star/small-star matches driver union-find") = forAll(genEdges) { edges =>
+  private def starComponents(edges: List[(Long, Long)]): Map[Long, Long] = {
     import spark.implicits._
-    val got = Graph.connectedComponentsStar(edges.toDF("src", "dst"))
+    Graph.connectedComponentsStar(edges.toDF("src", "dst"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    got == unionFind(edges)
   }
+
+  // default settings: these small graphs are solved on the driver
+  property("large-star/small-star matches driver union-find") =
+    forAll(genEdges) { edges => starComponents(edges) == unionFind(edges) }
+
+  property("large-star/small-star, distributed, matches driver union-find") =
+    forAll(genEdges) { edges =>
+      // a threshold ≤ 0 disables broadcasts and forces the contraction rounds
+      val key = "spark.sql.autoBroadcastJoinThreshold"
+      val prev = spark.conf.get(key)
+      spark.conf.set(key, "-1")
+      try starComponents(edges) == unionFind(edges)
+      finally spark.conf.set(key, prev)
+    }
 }

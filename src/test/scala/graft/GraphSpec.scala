@@ -39,6 +39,16 @@ class GraphSpec extends AnyFunSuite {
     assert(got === Map(2L -> 2L, 3L -> 2L, 4L -> 2L))
   }
 
+  /** Runs `body` once on the driver path and once, with broadcasts
+    * disabled, on the distributed contraction path. */
+  private def bothStarPaths(body: String => Unit): Unit = {
+    body("driver")
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try body("distributed") finally spark.conf.set(key, prev)
+  }
+
   private def starComponents(edges: Seq[(Long, Long)]): Map[Long, Long] =
     Graph.connectedComponentsStar(edges.toDF("src", "dst"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -47,14 +57,37 @@ class GraphSpec extends AnyFunSuite {
     // a 12-hop path: worst case for propagation (O(d) rounds), the
     // shape star contraction collapses in O(log d)
     val chain = (0L until 12L).map(i => (i, i + 1))
-    assert(starComponents(chain) === components(chain))
+    bothStarPaths(path => assert(starComponents(chain) === components(chain), path))
   }
 
   test("star contraction: empty edges, disjoint components, self-loops") {
-    assert(starComponents(Seq.empty) === Map.empty)
-    assert(starComponents(Seq((1L, 2L), (2L, 3L), (10L, 11L)))
-      === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
-    assert(starComponents(Seq((7L, 7L))) === Map(7L -> 7L))
+    bothStarPaths { path =>
+      assert(starComponents(Seq.empty) === Map.empty, path)
+      assert(starComponents(Seq((1L, 2L), (2L, 3L), (10L, 11L)))
+        === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L), path)
+      assert(starComponents(Seq((7L, 7L))) === Map(7L -> 7L), path)
+    }
+  }
+
+  test("star contraction: the driver and distributed paths return one schema") {
+    // names, types and nullability — for non-null and nullable inputs,
+    // and for edge lists on which the contraction runs no round
+    val inputs = Seq(
+      Seq((1L, 2L), (2L, 3L)).toDF("src", "dst"),
+      Seq.empty[(Long, Long)].toDF("src", "dst"),
+      Seq((7L, 7L)).toDF("src", "dst"),
+      Seq((Option(1L), Option(2L)), (Some(4L), None)).toDF("src", "dst"))
+    inputs.foreach { edges =>
+      val schemas = scala.collection.mutable.Map[String, String]()
+      val rows = scala.collection.mutable.Map[String, Set[String]]()
+      bothStarPaths { path =>
+        val out = Graph.connectedComponentsStar(edges)
+        schemas(path) = out.schema.treeString
+        rows(path) = out.collect().map(_.toString).toSet
+      }
+      assert(schemas("driver") === schemas("distributed"))
+      assert(rows("driver") === rows("distributed"))
+    }
   }
 
   private def ranks(edges: Seq[(Long, Long)], iters: Int = 3): Map[Long, Double] =

@@ -124,6 +124,16 @@ class PlanSpec extends AnyFunSuite {
     } finally tf.unpersist(false)
   }
 
+  test("connectedComponentsStar on a small edge list is one Spark job (the edge " +
+      "collect), solved on the driver") {
+    // one partition: the collect's first scan pass sees every edge
+    val edges = spark.range(0, 3, 1, 1).selectExpr("id AS src", "id + 1 AS dst")
+    val out = jobsIn("plan-cc-small")(graft.ops.Graph.connectedComponentsStar(edges))
+    assert(jobCount("plan-cc-small") === 1)
+    assert(out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ===
+      (0L to 3L).map(_ -> 0L).toMap)
+  }
+
   test("tf-idf build: two exchanges — the doc rows by doc_id at the full shuffle width, " +
       "then the counts by term; never the token stream by (doc_id, term)") {
     val docs = graft.core.Tables.documents(spark, dir)
