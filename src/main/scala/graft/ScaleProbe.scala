@@ -16,7 +16,9 @@ import org.apache.spark.sql.functions._
   * probes shouldn't have to pay for it), and `longdoc` deliberately
   * runs charEntropy's retired O(len²) baseline for contrast, which
   * alone costs ~10 min at 128× doc length — opt in with
-  * `ScaleProbe <factor> longdoc`.
+  * `ScaleProbe <factor> longdoc`. `ccgate` (also opt-in) times the
+  * driver and distributed paths of `Graph.connectedComponentsStar` on
+  * planted graphs around its driver edge budget.
   */
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
@@ -112,6 +114,94 @@ object ScaleProbe {
       .persist()
     println(s"[scale] candidate edges ${c.count()} rows")
     c
+    }
+
+    // connectedComponentsStar's driver/distributed gate: each graph is
+    // timed (median of three) on the driver path (threshold raised to
+    // fit it) and on the distributed contraction (threshold -1); `gate`
+    // times the default setting, so at budget + 1 edges it shows what
+    // an over-budget graph pays for the discarded collect. `held` =
+    // driver heap still held by the driver path's result frame (after a
+    // full GC); `peak` = the most heap in use right after any collection
+    // that ran during that call (run with a small young generation,
+    // e.g. -Xmn64m, so collections are frequent), both above the heap
+    // live before it. Shapes: disjoint pairs (most nodes per edge, the
+    // near-dup shape) and 16-node paths (more contraction rounds); then
+    // the LSH candidate graph of the dedup section.
+    if (sections("ccgate")) {
+      val key = "spark.sql.autoBroadcastJoinThreshold"
+      val default = spark.conf.get(key)
+      val budget = graft.ops.Graph.driverEdgeBudget(
+        spark.sessionState.conf.autoBroadcastJoinThreshold)
+      val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+      val rt = Runtime.getRuntime
+      def usedAfterGc(): Long = { System.gc(); System.gc(); rt.totalMemory - rt.freeMemory }
+      val heapPools = java.lang.management.ManagementFactory.getMemoryPoolMXBeans.toArray
+        .collect { case p: java.lang.management.MemoryPoolMXBean
+          if p.getType == java.lang.management.MemoryType.HEAP => p.getName }.toSet
+      // (start ms of JVM uptime, heap used after) of every collection;
+      // notifications arrive asynchronously, so filter by start time
+      val gcs = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
+      val uptime = java.lang.management.ManagementFactory.getRuntimeMXBean
+      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.forEach {
+        case gc: javax.management.NotificationEmitter =>
+          gc.addNotificationListener((n: javax.management.Notification, _: AnyRef) => {
+            val info = com.sun.management.GarbageCollectionNotificationInfo.from(
+              n.getUserData.asInstanceOf[javax.management.openmbean.CompositeData]).getGcInfo
+            var used = 0L
+            info.getMemoryUsageAfterGc.forEach((pool, u) =>
+              if (heapPools(pool)) used += u.getUsed)
+            gcs.add((info.getStartTime, used))
+          }, null, null)
+        case _ =>
+      }
+      // median of three runs
+      def timed(setting: String, edges: DataFrame): Double = {
+        spark.conf.set(key, setting)
+        try Seq.fill(3) {
+          val t0 = System.nanoTime()
+          graft.ops.Graph.connectedComponentsStar(edges).count()
+          (System.nanoTime() - t0) / 1e9
+        }.sorted.apply(1) finally spark.conf.set(key, default)
+      }
+      // a threshold whose budget fits any graph
+      val fit = (1L << 50).toString
+      def probe(name: String, edges: DataFrame, n: Long): Unit = {
+        // warm both paths
+        Seq(fit, "-1").foreach { t =>
+          spark.conf.set(key, t)
+          try graft.ops.Graph.connectedComponentsStar(edges).count()
+          finally spark.conf.set(key, default)
+        }
+        // let the context cleaner drop the warm-up's checkpoint blocks
+        usedAfterGc(); Thread.sleep(1000)
+        val base = usedAfterGc()
+        val from = uptime.getUptime
+        spark.conf.set(key, fit)
+        val result = try graft.ops.Graph.connectedComponentsStar(edges)
+          finally spark.conf.set(key, default)
+        val until = uptime.getUptime
+        val held = usedAfterGc() - base
+        Thread.sleep(500)
+        val during = gcs.toArray(Array.empty[(Long, Long)])
+          .collect { case (t, used) if t >= from && t <= until => used - base }
+        val peak = (held +: during).max
+        result.count()
+        println(f"[scale] ccgate $name%-8s edges=$n%8d driver=${timed(fit, edges)}%6.2fs " +
+          f"distributed=${timed("-1", edges)}%6.2fs gate=${timed(default, edges)}%6.2fs " +
+          f"held=${held / 1048576.0}%6.1fMB peak=${peak / 1048576.0}%6.1fMB")
+      }
+      println(s"[scale] ccgate budget=$budget edges, $parts partitions")
+      for (n <- (Seq(1000L, 10000L, 100000L, 655360L) ++
+          Seq(budget.toLong, budget + 1L).filter(_ > 0)).distinct.sorted) {
+        probe("pairs", spark.range(0, n, 1, parts)
+          .select((col("id") * 2).as("src"), (col("id") * 2 + 1).as("dst"))
+          .localCheckpoint(true), n)
+        probe("paths16", spark.range(0, n, 1, parts)
+          .selectExpr("id + id DIV 15 AS src", "id + id DIV 15 + 1 AS dst")
+          .localCheckpoint(true), n)
+      }
+      probe("lsh_cand", cand, cand.count())
     }
 
     if (sections("emission")) {

@@ -93,17 +93,26 @@ object Graph {
     * the same shrinking computation is not a practical concern).
     *
     * Size-adaptive: the first step collects at most `budget + 1` edges,
-    * `budget` = `spark.sql.autoBroadcastJoinThreshold` / 16 (16 bytes
-    * per (long, long) edge; 655,360 edges at the default 10 MiB). An
-    * edge list that fits is solved on the driver by a union-find that
-    * always keeps the smaller root, and returned as a local frame with
-    * the distributed path's exact schema and rows — one Spark job
-    * instead of several per contraction round. The gate reads the
-    * broadcast threshold because a frame that small is one Spark
-    * already ships through the driver for a broadcast join; a
-    * threshold ≤ 0 disables broadcasts and so forces the distributed
-    * path. `maxIter` binds only the distributed path: the driver path
-    * always runs to the fixpoint.
+    * `budget` = [[driverEdgeBudget]] of
+    * `spark.sql.autoBroadcastJoinThreshold` (10,240 edges at the
+    * default 10 MiB). An edge list that fits is solved on the driver by
+    * a union-find that always keeps the smaller root, and returned as a
+    * local frame with the distributed path's exact rows — the jobs of
+    * that one collect (one per scale-up round of its limit scan: 1 for
+    * a one-partition frame, 3 for eight) instead of several per
+    * contraction round. The gate reads the broadcast threshold because
+    * it is the driver heap the deployment already grants a small
+    * frame, and the budget keeps the driver path's measured peak heap
+    * within it; a threshold ≤ 0 disables broadcasts and so forces the
+    * distributed path. Measured by `ScaleProbe ccgate` (4 cores): the
+    * driver path is 7–17× faster at 10,000 edges and about even with
+    * the contraction at 655,360 (disjoint pairs; 3.4× faster on 16-node
+    * paths), so the heap, not the time, sets the budget. A larger edge
+    * list pays for the discarded collect (about 0.1 s just over the
+    * default budget) before its contraction runs.
+    * `maxIter` binds only the distributed path: the driver path always
+    * runs to the fixpoint. Both paths return `node` and `label` as
+    * nullable longs.
     */
   def connectedComponentsStar(edges: DataFrame, maxIter: Int = 50): DataFrame = {
     val spark = edges.sparkSession
@@ -113,6 +122,10 @@ object Graph {
     // Union the original node set so nodes whose only edges were
     // self-loops (dropped before iterating) keep the same
     // node-appears-iff-in-an-edge contract as connectedComponents.
+    // `node` is declared nullable whatever the input (`label`, a min,
+    // always is): a round's window min would make it so, and one fixed
+    // schema serves edge lists on which no round runs, and the driver
+    // path, alike.
     def assemble(stars: DataFrame): DataFrame = {
       val nodes = edges.select(col("src").as("node"))
         .union(edges.select(col("dst").as("node")))
@@ -120,6 +133,7 @@ object Graph {
         .union(stars.select(col("dst").as("node"), col("dst").as("label")))
         .union(nodes.select(col("node"), col("node").as("label")))
         .groupBy("node").agg(min("label").as("label"))
+        .select(when(col("node").isNotNull, col("node")).as("node"), col("label"))
     }
 
     def largeStar(e: DataFrame): DataFrame = {
@@ -155,20 +169,11 @@ object Graph {
 
     val pairs = edges.select(col("src"), col("dst"))
     val loopFree = pairs.filter(col("src") =!= col("dst"))
-    val budget = math.min(spark.sessionState.conf.autoBroadcastJoinThreshold / 16,
-      Int.MaxValue - 1L).toInt
+    val budget = driverEdgeBudget(spark.sessionState.conf.autoBroadcastJoinThreshold)
     if (budget > 0) {
-      val local = pairs.limit(budget + 1).collect()
-      if (local.length <= budget) {
-        val solved = driverComponents(local)
-        // the schema the contraction would return: a round's window
-        // min makes `node` nullable, and a round runs iff some edge
-        // joins two distinct nodes (then some node's label differs)
-        val rounds = solved.exists(r => r.get(0) != r.get(1))
-        val shape = if (rounds) smallStar(largeStar(loopFree)) else loopFree
-        return spark.createDataFrame(java.util.Arrays.asList(solved: _*),
-          assemble(shape).schema)
-      }
+      val solved = driverComponents(pairs, budget)
+      if (solved.isDefined)
+        return spark.createDataFrame(solved.get, assemble(loopFree).schema)
     }
 
     // checkpoints are LAZY (r17, job-count sweep): the checksum
@@ -189,30 +194,73 @@ object Graph {
     assemble(cur)
   }
 
-  /** (node, label) rows of [[connectedComponentsStar]] for collected
-    * (src, dst) rows, by union-find. Linking always under the smaller
-    * root keeps every root its component's minimum, so the root IS the
-    * label. A null endpoint joins nothing — the distributed path drops
-    * its edge and groups it as one (null, null) row.
+  /** Driver heap one edge of [[connectedComponentsStar]]'s driver path
+    * costs at its peak, rounded up. The peak holds the collected rows,
+    * the union-find's arrays and the local result frame; a graph of
+    * disjoint pairs (two output rows per edge) is the costliest shape.
+    * Measured on it by `ScaleProbe ccgate` (JDK 17, G1 with a 64 MiB
+    * young generation; most heap in use right after a collection, above
+    * the heap live before the call): 320 bytes per edge at 100,000
+    * edges, 790 at 655,360. The result frame alone holds about 140.
     */
-  private def driverComponents(rows: Array[Row]): Seq[Row] = {
-    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-    def find(x0: Long): Long = {
+  private val DriverBytesPerEdge = 1024L
+
+  /** Edges [[connectedComponentsStar]] solves on the driver for a
+    * broadcast threshold of `threshold` bytes: as many as keep the
+    * driver path's peak heap within the threshold (10,240 at the
+    * default 10 MiB); ≤ 0 when broadcasts are off.
+    */
+  def driverEdgeBudget(threshold: Long): Int =
+    math.min(threshold / DriverBytesPerEdge, Int.MaxValue - 1L).toInt
+
+  /** (node, label) rows of [[connectedComponentsStar]] for the edge
+    * list `pairs`, solved on the driver — or None when it has more than
+    * `budget` edges. At most `budget + 1` rows are collected, and their
+    * endpoints are copied at once into primitive arrays; the union-find
+    * runs over indexes into the sorted distinct node ids. Linking
+    * always under the smaller index keeps every root its component's
+    * minimum id, so the root IS the label. A null endpoint joins
+    * nothing — the distributed path drops its edge and groups it as one
+    * (null, null) row.
+    */
+  private def driverComponents(pairs: DataFrame, budget: Int)
+      : Option[java.util.List[Row]] = {
+    // ids(0 until k): every non-null endpoint; (src(i), dst(i)), i < m:
+    // every edge without a null end
+    val (ids, k, src, dst, m, sawNull) = {
+      val rows = pairs.limit(budget + 1).collect()
+      if (rows.length > budget) return None
+      val ids = new Array[Long](2 * rows.length)
+      val src = new Array[Long](rows.length)
+      val dst = new Array[Long](rows.length)
+      var k, m = 0
+      var sawNull = false
+      rows.foreach { r =>
+        if (r.isNullAt(0) || r.isNullAt(1)) sawNull = true
+        else { src(m) = r.getLong(0); dst(m) = r.getLong(1); m += 1 }
+        if (!r.isNullAt(0)) { ids(k) = r.getLong(0); k += 1 }
+        if (!r.isNullAt(1)) { ids(k) = r.getLong(1); k += 1 }
+      }
+      (ids, k, src, dst, m, sawNull)
+    }
+    java.util.Arrays.sort(ids, 0, k)
+    var n = 0
+    for (i <- 0 until k) if (n == 0 || ids(i) != ids(n - 1)) { ids(n) = ids(i); n += 1 }
+    val parent = Array.range(0, n)
+    def find(x0: Int): Int = {
       var x = x0
       while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
       x
     }
-    var sawNull = false
-    rows.foreach { r =>
-      val ends = Seq(0, 1).filterNot(r.isNullAt).map(r.getLong)
-      ends.foreach(n => parent.getOrElseUpdate(n, n))
-      if (ends.size == 2) {
-        val (a, b) = (find(ends(0)), find(ends(1)))
-        if (a < b) parent(b) = a else parent(a) = b
-      } else sawNull = true
+    def index(id: Long): Int = java.util.Arrays.binarySearch(ids, 0, n, id)
+    for (i <- 0 until m) {
+      val (a, b) = (find(index(src(i))), find(index(dst(i))))
+      if (a < b) parent(b) = a else parent(a) = b
     }
-    parent.keys.toSeq.map(n => Row(n, find(n))) ++
-      (if (sawNull) Seq(Row(null, null)) else Nil)
+    val out = new java.util.ArrayList[Row](n + 1)
+    for (i <- 0 until n) out.add(Row(ids(i), ids(find(i))))
+    if (sawNull) out.add(Row(null, null))
+    Some(out)
   }
 
   /** Fixed-iteration PageRank over the undirected graph given as an

@@ -124,14 +124,22 @@ class PlanSpec extends AnyFunSuite {
     } finally tf.unpersist(false)
   }
 
-  test("connectedComponentsStar on a small edge list is one Spark job (the edge " +
-      "collect), solved on the driver") {
-    // one partition: the collect's first scan pass sees every edge
-    val edges = spark.range(0, 3, 1, 1).selectExpr("id AS src", "id + 1 AS dst")
-    val out = jobsIn("plan-cc-small")(graft.ops.Graph.connectedComponentsStar(edges))
-    assert(jobCount("plan-cc-small") === 1)
-    assert(out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ===
-      (0L to 3L).map(_ -> 0L).toMap)
+  test("connectedComponentsStar on a small edge list runs only its edge collect: " +
+      "one job per scale-up round of the limit scan") {
+    // the collect scans 1 partition, then 4× as many per round
+    // (spark.sql.limit.scaleUpFactor) until it has budget + 1 edges or
+    // none are left: 1 job for 1 partition, 3 for 8 (1, 4, then 3).
+    // Checkpointed, like the dedup callers' edge frames: over a bare
+    // range the optimizer knows there are 3 rows and drops the limit.
+    for ((parts, jobs) <- Seq(1 -> 1, 8 -> 3)) {
+      val group = s"plan-cc-small-$parts"
+      val edges = spark.range(0, 3, 1, parts).selectExpr("id AS src", "id + 1 AS dst")
+        .localCheckpoint(true)
+      val out = jobsIn(group)(graft.ops.Graph.connectedComponentsStar(edges))
+      assert(jobCount(group) === jobs, s"$parts partitions")
+      assert(out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ===
+        (0L to 3L).map(_ -> 0L).toMap)
+    }
   }
 
   test("tf-idf build: two exchanges — the doc rows by doc_id at the full shuffle width, " +
