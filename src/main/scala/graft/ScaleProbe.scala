@@ -132,7 +132,7 @@ object ScaleProbe {
       val key = "spark.sql.autoBroadcastJoinThreshold"
       val default = spark.conf.get(key)
       val budget = graft.ops.Graph.driverEdgeBudget(
-        spark.sessionState.conf.autoBroadcastJoinThreshold)
+        graft.core.Gate.broadcastThreshold(spark))
       val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
       val rt = Runtime.getRuntime
       def usedAfterGc(): Long = { System.gc(); System.gc(); rt.totalMemory - rt.freeMemory }
@@ -1188,9 +1188,10 @@ object ScaleProbe {
         corpus.unpersist()
       }
       // the same 4x heal THROUGH the mega-cluster fallback (r12 verdict
-      // #2): broadcastRowBudget=0 forces every gated join onto the
-      // shuffled path — the hostile-shape guard must keep the heal
-      // O(touched), not O(corpus), costing at most the extra shuffles
+      // #2): broadcasts off (autoBroadcastJoinThreshold -1) force every
+      // gated join onto the shuffled path — the hostile-shape guard must
+      // keep the heal O(touched), not O(corpus), costing at most the
+      // extra shuffles (the heal's components run distributed too)
       locally {
         val st = s"$root/healsh"
         val corpus = saltedCorpus(4).persist()
@@ -1199,11 +1200,13 @@ object ScaleProbe {
           corpus.filter(col("doc_id") % 2 === 0), 0, st)
         graft.ops.Dedup.clustersIngestBatch(
           corpus.filter(col("doc_id") % 2 === 1), 1, st)
-        time("dedup_delete_heal_4x_shuf") {
-          graft.ops.Dedup.deleteFromDedupState(spark, st, healDel, 0.5,
-            broadcastRowBudget = 0L)
+        val key = "spark.sql.autoBroadcastJoinThreshold"
+        val prev = spark.conf.get(key)
+        spark.conf.set(key, "-1")
+        try time("dedup_delete_heal_4x_shuf") {
+          graft.ops.Dedup.deleteFromDedupState(spark, st, healDel)
           1L
-        }
+        } finally spark.conf.set(key, prev)
         corpus.unpersist()
       }
       healDel.unpersist()

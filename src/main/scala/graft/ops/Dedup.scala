@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Kernels
 
-import graft.core.Tables
+import graft.core.{Gate, Tables}
 import graft.text.Shingles
 
 /** Deduplication operators for a training-data pipeline, over the
@@ -513,8 +513,7 @@ object Dedup extends graft.QueryModule {
     val carried = flatStoreTombstones(spark, dir)
       .map(_.localCheckpoint(true)) // materialize BEFORE the dir clears
     val scrubbed = carried.fold(sigs)(t =>
-      gatedJoin(sigs, t, "doc_id", "left_anti",
-        t.count() <= DeletedBroadcastRows))
+      Gate.join(sigs, Gate.measure(t), "doc_id", "left_anti"))
     carried match {
       case Some(t) =>
         // sweep UNSEALED park dirs (crashed prior park writes — invisible
@@ -567,21 +566,19 @@ object Dedup extends graft.QueryModule {
     * like `_SUCCESS` itself) via [[deleteFromMinhashSignatures]], and
     * THIS READER anti-joins them out — suppression is a reader gate,
     * never caller discipline (the one store where it used to be).
-    * The anti-join is size-gated on the same
-    * [[DeletedBroadcastRows]] budget as the state-dir path (a mass
-    * purge falls back shuffled). Bytes remain until re-write; a
-    * deployment that needs the FULL lifecycle (heal, physical
-    * materialization, durable deletion log, [[allowReingestDocs]])
-    * should hold its signatures in the [[clustersIngestBatch]]
-    * state-dir store and read through [[readSignatureStoreState]].
+    * The anti-join is size-gated by [[graft.core.Gate]] like the
+    * state-dir path (a mass purge falls back shuffled). Bytes remain
+    * until re-write; a deployment that needs the FULL lifecycle (heal,
+    * physical materialization, durable deletion log,
+    * [[allowReingestDocs]]) should hold its signatures in the
+    * [[clustersIngestBatch]] state-dir store and read through
+    * [[readSignatureStoreState]].
     */
   def readMinhashSignatures(spark: SparkSession, dir: String): DataFrame = {
     val sigs = graft.core.Artifacts.gatedRead(spark, dir,
       "readMinhashSignatures", "re-run writeMinhashSignatures")
-    flatStoreTombstones(spark, dir).fold(sigs) { t =>
-      gatedJoin(sigs, t, "doc_id", "left_anti",
-        t.count() <= DeletedBroadcastRows)
-    }
+    flatStoreTombstones(spark, dir).fold(sigs)(t =>
+      Gate.join(sigs, Gate.measure(t), "doc_id", "left_anti"))
   }
 
   /** DELETE documents from a FLAT [[writeMinhashSignatures]] store:
@@ -1567,20 +1564,20 @@ object Dedup extends graft.QueryModule {
     // gate and the deleted-doc filter below
     val tombsOpt = pendingTombstones(spark, stateDir)
     tombsOpt.foreach(t =>
-      requireAssignmentsHealed(spark, stateDir, t, "clustersIngestBatch",
-        overwrites = Some(id)))
+      requireAssignmentsHealed(spark, stateDir, Gate.measure(t),
+        "clustersIngestBatch", overwrites = Some(id)))
     // a batch may REDELIVER (or a source keep emitting) a doc deleted
     // since its first run: deleted docs stay deleted — signatures are
     // filtered against (pending tombstones ∪ deletion log) before both
     // use and store, so neither a replayed write nor a post-compaction
     // redelivery can resurrect a takedown (allowReingestDocs is the
-    // deliberate re-admission). Derived ONCE per batch (materialized —
-    // it is takedown-sized) and threaded through both the batch sketch
-    // and the history read below.
-    val delOpt = deletedDocs(spark, stateDir, tombsOpt).map(_.localCheckpoint(true))
-    val delFits = delOpt.forall(_.count() <= DeletedBroadcastRows)
+    // deliberate re-admission). Derived and measured ONCE per batch
+    // (materialized — it is takedown-sized) and threaded through both
+    // the batch sketch and the history read below.
+    val delOpt = deletedDocs(spark, stateDir, tombsOpt)
+      .map(d => Gate.measure(d.localCheckpoint(true)))
     def dropDeleted(df: DataFrame): DataFrame =
-      delOpt.fold(df)(t => gatedJoin(df, t, "doc_id", "left_anti", delFits))
+      delOpt.fold(df)(Gate.join(df, _, "doc_id", "left_anti"))
     // lifecycle note for the per-micro-batch caller (clustersOnIngest):
     // the localCheckpoint blocks here and inside the incremental path
     // hold no references past this call, so the ContextCleaner
@@ -1650,24 +1647,18 @@ object Dedup extends graft.QueryModule {
     * compaction itself, only tolerated. Run it between batches (it
     * must not race an in-flight [[clustersIngestBatch]] write).
     */
-  def compactSignatureStore(spark: SparkSession, stateDir: String,
-      broadcastRowBudget: Long = -1L): Unit =
+  def compactSignatureStore(spark: SparkSession, stateDir: String): Unit =
     graft.core.Artifacts.withMaintenanceLease(fsFor(spark, stateDir),
       stateDir, "compactSignatureStore") {
-      compactSignatureStoreImpl(spark, stateDir, broadcastRowBudget)
+      compactSignatureStoreImpl(spark, stateDir)
     }
 
   /** [[compactSignatureStore]] without the lease wrapper — the internal
     * path for [[maintainDedupState]], which already holds the state's
-    * maintenance lease for its whole chain. `broadcastRowBudget` < 0
-    * resolves to [[DeletedBroadcastRows]] (r13 ADVICE: a caller that
-    * KNOWS its purge is huge forces the shuffled probes here too, not
-    * just in the heal).
+    * maintenance lease for its whole chain.
     */
   private def compactSignatureStoreImpl(spark: SparkSession,
-      stateDir: String, broadcastRowBudget0: Long = -1L): Unit = {
-    val broadcastRowBudget =
-      if (broadcastRowBudget0 < 0) DeletedBroadcastRows else broadcastRowBudget0
+      stateDir: String): Unit = {
     val sigsRoot = s"$stateDir/sigs"
     val conf = spark.sessionState.newHadoopConf()
     val root = new org.apache.hadoop.fs.Path(sigsRoot)
@@ -1707,8 +1698,8 @@ object Dedup extends graft.QueryModule {
     }
     val ids = entries.map(_._1).sorted
     // lazy checkpoint (r17, job-count sweep): the first consumer is a
-    // full-scan count (requireAssignmentsHealed's budget probe), which
-    // materializes it — one job instead of two
+    // full-scan count (its Gate.measure below), which materializes it —
+    // one job instead of two
     val tombsOpt = pendingTombstones(spark, stateDir).map(_.localCheckpoint(false))
     if (ids.length <= 3 && tombsOpt.isEmpty) return // {base, prev, current}, no deletes
     val targetBytes = spark.sessionState.conf.filesMaxPartitionBytes
@@ -1743,7 +1734,7 @@ object Dedup extends graft.QueryModule {
         absorb.foreach { old =>
           fs.delete(new org.apache.hadoop.fs.Path(s"$sigsRoot/ingest_batch=$old"), true)
         }
-      case Some(tombs) =>
+      case Some(tombs0) =>
         // deletions pending: this fold is the MATERIALIZATION step, so
         // it must REWRITE partitions (append-then-delete can only grow
         // them). Reachable with ZERO signature partitions via the
@@ -1755,11 +1746,15 @@ object Dedup extends graft.QueryModule {
             s"store holds no signature partitions under $sigsRoot — " +
             "re-ingest the corpus first, then compact to materialize the " +
             "deletions")
+        // the tombstone set is takedown-sized normally, corpus-order
+        // under a mass purge — measured once, it gates the healed-state
+        // probe and every join below like every other deletion-path
+        // consumer
+        val tombs = Gate.measure(tombs0)
         // Refuse if the assignment heal hasn't run — clearing
         // the tombstones below would discard the only evidence the
         // heal needs.
-        requireAssignmentsHealed(spark, stateDir, tombs, "compactSignatureStore",
-          broadcastRowBudget0 = broadcastRowBudget)
+        requireAssignmentsHealed(spark, stateDir, tombs, "compactSignatureStore")
         requireNoParks(spark, s"$stateDir/assign", "compactSignatureStore")
         // the materialize path may rewrite ANY partition (wherever
         // tombstoned rows hide — and a torn partition's partial read
@@ -1770,11 +1765,6 @@ object Dedup extends graft.QueryModule {
         val absorb = if (ids.length <= 3) Seq.empty[Long]
           else ids.slice(1, ids.length - 2)
         val keep = ids.filterNot(absorb.contains)
-        // the tombstone set is takedown-sized normally, corpus-order
-        // under a mass purge — gate its broadcasts like every other
-        // deletion-path consumer (tombs is checkpointed above), under
-        // the caller's budget when one was passed
-        val tombsFit = tombs.count() <= broadcastRowBudget
         // rewrite only when there is something to change: the base
         // when it absorbs folded partitions, any partition that
         // physically holds a tombstoned row. ONE probe job over the
@@ -1785,7 +1775,7 @@ object Dedup extends graft.QueryModule {
             spark.read.parquet(s"$sigsRoot/ingest_batch=$id")
               .select(col("doc_id")).withColumn("_p", lit(id)))
             .reduce(_ unionByName _)
-          gatedJoin(all, tombs, "doc_id", "semi", tombsFit)
+          Gate.join(all, tombs, "doc_id", "semi")
             .select("_p").distinct().collect().map(_.getLong(0)).toSet
         }
         keep.foreach { id =>
@@ -1793,8 +1783,8 @@ object Dedup extends graft.QueryModule {
           val srcs = if (id == base) own +: absorb.map(i =>
             s"$sigsRoot/ingest_batch=$i") else Seq(own)
           if (srcs.length > 1 || holdIds(id)) {
-            val data = gatedJoin(spark.read.parquet(srcs: _*),
-              tombs, "doc_id", "left_anti", tombsFit)
+            val data = Gate.join(spark.read.parquet(srcs: _*),
+              tombs, "doc_id", "left_anti")
               .coalesce(nOut(srcs))
             // crash-safe in-place swap (rewriteDirInPlace): a crash at
             // any point either leaves the original serving or parks it
@@ -1842,10 +1832,10 @@ object Dedup extends graft.QueryModule {
         val flatFiles = if (flatSealed) flatLogFiles(fs, logRoot) else Seq.empty
         val logRows =
           if (flatFiles.nonEmpty)
-            tombs.unionByName(
+            tombs0.unionByName(
                 spark.read.parquet(flatFiles: _*).select("doc_id"))
               .distinct().localCheckpoint(true)
-          else tombs
+          else tombs0
         logRows.write.mode("overwrite")
           .parquet(s"$logRoot/log=${(0L +: logIds.map(_._1)).max + 1}")
         // retire the flat layout whenever its remnants coexist with a
@@ -1931,29 +1921,6 @@ object Dedup extends graft.QueryModule {
   private def fsFor(spark: SparkSession, dir: String) =
     new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sessionState.newHadoopConf())
-
-  /** Broadcast ceiling for deletion-path frames (pending tombstones ∪
-    * deletion log, touched clusters, surviving members): takedown-sized
-    * in normal operation, CORPUS-ORDER under a mass compliance purge —
-    * so every consumer size-gates its broadcast on a cheap count of the
-    * (small-parquet or checkpointed) frame and falls back to the same
-    * join shuffled (r12 verdict #2, generalized from the heal to the
-    * whole deletion path). The fallback carries an explicit merge hint:
-    * Spark's size estimate would otherwise quietly re-broadcast the
-    * very frame the gate measured as over budget.
-    */
-  private def DeletedBroadcastRows: Long =
-    // JVM-property override (`graft.deleted.broadcast.rows`): the
-    // operational dial for deployments whose purges are routinely
-    // huge, and the hook the spec uses to drive the fallback without a
-    // 2M-row fixture
-    sys.props.get("graft.deleted.broadcast.rows").map(_.toLong)
-      .getOrElse(2000000L)
-
-  private def gatedJoin(left: DataFrame, right: DataFrame, key: String,
-      how: String, fits: Boolean): DataFrame =
-    if (fits) left.join(broadcast(right), Seq(key), how)
-    else left.join(right.hint("merge"), Seq(key), how)
 
   /** All sealed tombstoned doc ids as one distinct frame; None when no
     * deletions pend. Unsealed `del=` dirs are crashed deletes —
@@ -2184,24 +2151,24 @@ object Dedup extends graft.QueryModule {
   def readSignatureStoreState(spark: SparkSession, stateDir: String,
       beforeId: Option[Long] = None): DataFrame =
     readSignatureStoreStateWith(spark, stateDir, beforeId,
-      deletedDocs(spark, stateDir, pendingTombstones(spark, stateDir)))
+      deletedDocs(spark, stateDir, pendingTombstones(spark, stateDir))
+        .map(Gate.measure))
 
-  /** [[readSignatureStoreState]] with a PRECOMPUTED deleted-doc filter
-    * — the per-micro-batch path derives the filter once and threads it
-    * through both the batch sketch and this read, instead of paying
-    * the tombstone/log directory listings and union plan twice per
-    * ingest batch (second review pass).
+  /** [[readSignatureStoreState]] with a PRECOMPUTED, measured
+    * deleted-doc filter — the per-micro-batch path derives and counts
+    * the filter once and threads it through both the batch sketch and
+    * this read, instead of paying the tombstone/log directory
+    * listings, union plan and count twice per ingest batch.
     */
   private def readSignatureStoreStateWith(spark: SparkSession,
       stateDir: String, beforeId: Option[Long],
-      deleted: Option[DataFrame]): DataFrame = {
+      deleted: Option[Gate.Measured]): DataFrame = {
     val sigsRoot = s"$stateDir/sigs"
     requireNoParks(spark, sigsRoot, "readSignatureStoreState")
     val all = spark.read.parquet(sigsRoot)
     val ranged = beforeId.fold(all)(id => all.filter(col("ingest_batch") < id))
       .drop("ingest_batch")
-    deleted.fold(ranged)(t => gatedJoin(ranged, t, "doc_id", "left_anti",
-      t.count() <= DeletedBroadcastRows))
+    deleted.fold(ranged)(Gate.join(ranged, _, "doc_id", "left_anti"))
   }
 
   /** The latest sealed cluster-assignment snapshot of a
@@ -2232,8 +2199,7 @@ object Dedup extends graft.QueryModule {
     * clustering threshold.
     */
   def deleteFromDedupState(spark: SparkSession, stateDir: String,
-      docIds: DataFrame, minEstJaccard: Double = 0.5,
-      broadcastRowBudget: Long = -1L): Unit = {
+      docIds: DataFrame, minEstJaccard: Double = 0.5): Unit = {
     require(docIds.columns.contains("doc_id"),
       s"deleteFromDedupState: docIds must carry a `doc_id` column, got " +
         docIds.columns.mkString(","))
@@ -2252,7 +2218,7 @@ object Dedup extends graft.QueryModule {
       // and every later tombstone read lists them all
       graft.core.Tables.shrinkSmall(docIds.select("doc_id").distinct())
         .write.mode("overwrite").parquet(s"$root/del=$next")
-      healAssignmentsImpl(spark, stateDir, minEstJaccard, broadcastRowBudget)
+      healAssignmentsImpl(spark, stateDir, minEstJaccard)
     }
   }
 
@@ -2289,31 +2255,26 @@ object Dedup extends graft.QueryModule {
     * in the normal case (takedown-sized), but ONE degenerate cluster —
     * boilerplate shingles gluing millions of docs — makes `survivors`
     * broadcast-sized and a mass compliance purge makes the tombstones
-    * so. Each broadcast is therefore size-gated on a cheap count of
-    * the already-checkpointed frame: above `broadcastRowBudget` rows
-    * the same join runs shuffled (identical output — semi/anti joins
-    * are strategy-independent), so the heal stays O(touched) under
-    * hostile shapes instead of OOMing the driver mid-takedown.
+    * so. Each broadcast is therefore size-gated ([[graft.core.Gate]])
+    * on one count of the already-checkpointed frame: over
+    * `spark.sql.autoBroadcastJoinThreshold` at 16 bytes a row the same
+    * join runs shuffled (identical output — semi/anti joins are
+    * strategy-independent), so the heal stays O(touched) under hostile
+    * shapes instead of OOMing the driver mid-takedown.
     */
   def healAssignments(spark: SparkSession, stateDir: String,
-      minEstJaccard: Double = 0.5,
-      broadcastRowBudget: Long = -1L): Unit =
+      minEstJaccard: Double = 0.5): Unit =
     graft.core.Artifacts.withMaintenanceLease(fsFor(spark, stateDir),
       stateDir, "healAssignments") {
-      healAssignmentsImpl(spark, stateDir, minEstJaccard, broadcastRowBudget)
+      healAssignmentsImpl(spark, stateDir, minEstJaccard)
     }
 
   /** [[healAssignments]] without the lease wrapper — the internal path
     * for callers that already hold the state's maintenance lease
     * ([[deleteFromDedupState]], [[maintainDedupState]]).
-    * `broadcastRowBudget` < 0 resolves to the shared
-    * [[DeletedBroadcastRows]] ceiling (JVM-property-tunable), so the
-    * operational dial reaches the heal too.
     */
   private def healAssignmentsImpl(spark: SparkSession, stateDir: String,
-      minEstJaccard: Double, broadcastRowBudget0: Long): Unit = {
-    val broadcastRowBudget =
-      if (broadcastRowBudget0 < 0) DeletedBroadcastRows else broadcastRowBudget0
+      minEstJaccard: Double): Unit = {
     val assignRoot = s"$stateDir/assign"
     val sigsRoot = s"$stateDir/sigs"
     val fs = fsFor(spark, stateDir)
@@ -2322,7 +2283,7 @@ object Dedup extends graft.QueryModule {
     graft.core.Artifacts.healRewrites(fs, assignRoot)
     // lazy checkpoint (r17, job-count sweep): the count below is a
     // full scan and materializes it — one job instead of two
-    val tombs = pendingTombstones(spark, stateDir).getOrElse(return)
+    val tombs0 = pendingTombstones(spark, stateDir).getOrElse(return)
       .localCheckpoint(false)
     requireNoParks(spark, sigsRoot, "healAssignments")
     // TORN-partition gate (r12 ADVICE, medium): the ingest gate
@@ -2349,11 +2310,9 @@ object Dedup extends graft.QueryModule {
       .collect { case (a, true) => a }.sorted
     val (blocked, snapIds) =
       allSnapIds.partition(id => tornSigs.exists(_ <= id))
-    // every join below is [[gatedJoin]]-strategy-picked by a measured
-    // row count of its (checkpointed) build side; this op takes the
-    // budget as a parameter so a caller that KNOWS its purge is huge
-    // can force the shuffled path outright
-    val tombsFit = tombs.count() <= broadcastRowBudget
+    // every join below is Gate.join-strategy-picked by a measured row
+    // count of its (checkpointed) build side
+    val tombs = Gate.measure(tombs0)
     // snapshot heals OVERLAP (r17, guide §2.6): each snapshot's heal is
     // independent and individually complete (disjoint rewrite dirs,
     // shared READ-ONLY inputs — the checkpointed tombstones and the
@@ -2371,21 +2330,18 @@ object Dedup extends graft.QueryModule {
       // count doubles as the emptiness/broadcast-budget probe and
       // materializes the checkpoint — the eager-checkpoint + head +
       // count ladder was three jobs per snapshot
-      val touched = gatedJoin(assign, tombs, "doc_id", "semi", tombsFit)
-        .select("cluster_id").distinct().localCheckpoint(false)
-      val nTouched = touched.count()
-      if (nTouched > 0) {
-        val touchedFit = nTouched <= broadcastRowBudget
-        val members = gatedJoin(assign, touched, "cluster_id", "semi", touchedFit)
-        val survivors = gatedJoin(members, tombs, "doc_id", "left_anti", tombsFit)
-          .select("doc_id").localCheckpoint(false)
-        val survivorsFit = survivors.count() <= broadcastRowBudget
+      val touched = Gate.measure(Gate.join(assign, tombs, "doc_id", "semi")
+        .select("cluster_id").distinct().localCheckpoint(false))
+      if (touched.rows > 0) {
+        val members = Gate.join(assign, touched, "cluster_id", "semi")
+        val survivors = Gate.measure(Gate.join(members, tombs, "doc_id", "left_anti")
+          .select("doc_id").localCheckpoint(false))
         val subSigs0 = spark.read.parquet(sigsRoot)
           .filter(col("ingest_batch") <= id).drop("ingest_batch")
-        val subSigs = gatedJoin(subSigs0, survivors, "doc_id", "semi", survivorsFit)
+        val subSigs = Gate.join(subSigs0, survivors, "doc_id", "semi")
         val subAssign = clustersFromCandidates(
           candidatesFromSignatures(subSigs, minEstJaccard))
-        val healed = gatedJoin(assign, touched, "cluster_id", "left_anti", touchedFit)
+        val healed = Gate.join(assign, touched, "cluster_id", "left_anti")
           .select("doc_id", "cluster_id", "cluster_size")
           .unionByName(subAssign.select("doc_id", "cluster_id", "cluster_size"))
           // fully materialize BEFORE the rewrite parks the dir this
@@ -2443,14 +2399,10 @@ object Dedup extends graft.QueryModule {
     * replay waits on heal.
     */
   private def requireAssignmentsHealed(spark: SparkSession, stateDir: String,
-      tombs: DataFrame, who: String,
-      overwrites: Option[Long] = None,
-      broadcastRowBudget0: Long = -1L): Unit = {
-    val broadcastRowBudget =
-      if (broadcastRowBudget0 < 0) DeletedBroadcastRows else broadcastRowBudget0
+      tombs: Gate.Measured, who: String,
+      overwrites: Option[Long] = None): Unit = {
     val assignRoot = s"$stateDir/assign"
     val fs = fsFor(spark, stateDir)
-    val tombsFit = tombs.count() <= broadcastRowBudget
     val snapIds = graft.core.Artifacts
       .sealedFamilyDirs(fs, assignRoot, "ingest_batch")
       .collect { case (a, true) => a }
@@ -2463,7 +2415,7 @@ object Dedup extends graft.QueryModule {
         spark.read.parquet(s"$assignRoot/ingest_batch=$id")
           .select(col("doc_id")).withColumn("_snap", lit(id)))
         .reduce(_ unionByName _)
-      val staleIds = gatedJoin(all, tombs, "doc_id", "semi", tombsFit)
+      val staleIds = Gate.join(all, tombs, "doc_id", "semi")
         .select("_snap").distinct().collect().map(_.getLong(0)).sorted
       require(staleIds.isEmpty,
         s"$who: assignment snapshot(s) ingest_batch=" +
@@ -2500,8 +2452,7 @@ object Dedup extends graft.QueryModule {
     * dup_recall). Serial-writer contract: run between batches.
     */
   def maintainDedupState(spark: SparkSession, stateDir: String,
-      minEstJaccard: Double = 0.5, probeModulus: Long = 101L,
-      broadcastRowBudget: Long = -1L): DataFrame = {
+      minEstJaccard: Double = 0.5, probeModulus: Long = 101L): DataFrame = {
     import spark.implicits._
     require(probeModulus > 0, s"probeModulus must be > 0, got $probeModulus")
     val sigsRoot = s"$stateDir/sigs"
@@ -2529,11 +2480,9 @@ object Dedup extends graft.QueryModule {
     val pending = pendingTombstones(spark, stateDir)
     val nTombstoned = pending.map(_.count()).getOrElse(0L)
     val healed = pending.isDefined
-    if (healed) healAssignmentsImpl(spark, stateDir, minEstJaccard,
-      broadcastRowBudget) // lease already held
+    if (healed) healAssignmentsImpl(spark, stateDir, minEstJaccard) // lease already held
     leaseRefresh() // heal done — heartbeat before the compaction phase
-    compactSignatureStoreImpl(spark, stateDir,
-      broadcastRowBudget) // lease already held
+    compactSignatureStoreImpl(spark, stateDir) // lease already held
     leaseRefresh() // compaction done — heartbeat before the probe
     val partsAfter = sigPartitions().size.toLong
     val nFiles = {

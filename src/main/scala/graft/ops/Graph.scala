@@ -169,7 +169,7 @@ object Graph {
 
     val pairs = edges.select(col("src"), col("dst"))
     val loopFree = pairs.filter(col("src") =!= col("dst"))
-    val budget = driverEdgeBudget(spark.sessionState.conf.autoBroadcastJoinThreshold)
+    val budget = driverEdgeBudget(graft.core.Gate.broadcastThreshold(spark))
     if (budget > 0) {
       val solved = driverComponents(pairs, budget)
       if (solved.isDefined)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Kernels
 
-import graft.core.Tables
+import graft.core.{Gate, Tables}
 
 /** Similarity search over the `embeddings` table (64-d float vectors).
   *
@@ -1357,29 +1357,16 @@ object VectorOps extends graft.QueryModule {
     else None
   }
 
-  /** Deleted-vid broadcast ceiling — the
-    * [[graft.ops.Dedup]] DeletedBroadcastRows twin (r13 review):
-    * takedown-sized sets broadcast, a mass compliance purge falls back
-    * to the same anti-join shuffled (merge-hinted so Spark's size
-    * estimate cannot re-broadcast what the gate measured over budget).
-    */
-  private def deletedBroadcastRows: Long =
-    sys.props.get("graft.deleted.broadcast.rows").map(_.toLong)
-      .getOrElse(2000000L)
-
-  private def gatedAnti(left: DataFrame, right: DataFrame,
-      key: String): DataFrame =
-    if (right.count() <= deletedBroadcastRows)
-      left.join(broadcast(right), Seq(key), "left_anti")
-    else left.join(right.hint("merge"), Seq(key), "left_anti")
-
   /** Anti-join a codes-shaped frame (`vid` column) against the
     * version's deletion log — the single suppression point every
-    * writer shares. Size-gated like every deletion-path join.
+    * writer shares. Size-gated like every deletion-path join
+    * ([[graft.core.Gate]]): takedown-sized logs broadcast, a mass
+    * compliance purge joins shuffled.
     */
   private def dropLogged(spark: SparkSession, versionDir: String,
       codes: DataFrame): DataFrame =
-    deletionLog(spark, versionDir).fold(codes)(l => gatedAnti(codes, l, "vid"))
+    deletionLog(spark, versionDir).fold(codes)(l =>
+      Gate.join(codes, Gate.measure(l), "vid", "left_anti"))
 
   /** Scrub a retrain's TRAINING corpus (`vec_id` keyed) against the
     * latest complete version's deleted set — deletion log ∪ sealed
@@ -1389,8 +1376,8 @@ object VectorOps extends graft.QueryModule {
     * would still be FIT on their embeddings — logged-deleted vectors
     * influencing the quantizer model after every retrain, a gap in
     * the takedown-durability claim that nothing depends on the
-    * operator purging the corpus. Size-gated anti-join ([[gatedAnti]]);
-    * no prior version → input unchanged.
+    * operator purging the corpus. Size-gated anti-join
+    * ([[graft.core.Gate]]); no prior version → input unchanged.
     */
   private def scrubDeletedTraining(spark: SparkSession, dir: String,
       embeddings: DataFrame): DataFrame = {
@@ -1410,8 +1397,8 @@ object VectorOps extends graft.QueryModule {
           case (Some(t), Some(l)) => Some(t.unionByName(l).distinct())
           case (t, l) => t.orElse(l)
         }
-        deleted.fold(embeddings)(d => gatedAnti(embeddings,
-          d.select(col("vid").as("vec_id")), "vec_id"))
+        deleted.fold(embeddings)(d => Gate.join(embeddings,
+          Gate.measure(d.select(col("vid").as("vec_id"))), "vec_id", "left_anti"))
       }
   }
 

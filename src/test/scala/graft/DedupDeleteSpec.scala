@@ -35,6 +35,17 @@ class DedupDeleteSpec extends AnyFunSuite {
     */
   private val delPred = col("doc_id") % 7 === 3
 
+  /** Run `body` with Spark's broadcast threshold at -1: every gated
+    * deletion-path join runs shuffled (and every components solve
+    * distributed) — the mass-purge shape without a corpus-order
+    * fixture. */
+  private def broadcastsOff[T](body: => T): T = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try body finally spark.conf.set(key, prev)
+  }
+
   test("delete heals every retained assignment snapshot to the scrubbed-corpus " +
       "from-scratch clustering; candidates exclude deleted docs immediately") {
     val state = tmp("dedup-del-state")
@@ -308,11 +319,10 @@ class DedupDeleteSpec extends AnyFunSuite {
     assert(Dedup.readClusterAssignment(spark, state)
       .filter(col("cluster_size") >= 300).count() >= 300,
       "fixture did not plant a giant cluster")
-    // budget 0 forces EVERY gated join (tombs semi, touched semi/anti,
-    // survivors semi) onto the shuffled path; deleting doc 0 — the
-    // giant cluster's min-id LABEL — also forces a full relabel
-    Dedup.deleteFromDedupState(spark, state, Seq(0L).toDF("doc_id"), 0.5,
-      broadcastRowBudget = 0L)
+    // broadcasts off force EVERY gated join (tombs semi, touched
+    // semi/anti, survivors semi) onto the shuffled path; deleting doc 0
+    // — the giant cluster's min-id LABEL — also forces a full relabel
+    broadcastsOff(Dedup.deleteFromDedupState(spark, state, Seq(0L).toDF("doc_id")))
     val scrubbed = corpus.filter(col("doc_id") =!= 0L)
     assert(assignSet(Dedup.readClusterAssignment(spark, state))
       === assignSet(Dedup.dupClusters(scrubbed, 0.5)),
@@ -680,21 +690,6 @@ class DedupDeleteSpec extends AnyFunSuite {
       "re-admitted docs stayed suppressed after the crashed drop-all")
   }
 
-  test("broadcastRowBudget=0 passed as a PARAMETER (JVM prop unset) forces the " +
-      "shuffled probes through compaction + the healed-gate too (r13 ADVICE)") {
-    val state = tmp("dedup-budget-param")
-    assert(sys.props.get("graft.deleted.broadcast.rows").isEmpty)
-    Dedup.clustersIngestBatch(docs.filter(col("doc_id") < 400), 0, state)
-    Dedup.deleteFromDedupState(spark, state,
-      docs.filter(delPred).select("doc_id"), 0.5, broadcastRowBudget = 0L)
-    Dedup.compactSignatureStore(spark, state, broadcastRowBudget = 0L)
-    assert(spark.read.parquet(s"$state/sigs").filter(delPred).count() === 0)
-    assert(assignSet(Dedup.readClusterAssignment(spark, state))
-      === assignSet(Dedup.dupClusters(
-        docs.filter(col("doc_id") < 400 && !delPred), 0.5)),
-      "parameter-budget shuffled lifecycle != broadcast lifecycle output")
-  }
-
   test("a lease that VANISHES mid-read reads as no lease, not a young torn " +
       "one — a released lease racing the read must not refuse (r13 ADVICE)") {
     val state = tmp("dedup-lease-vanish")
@@ -722,11 +717,10 @@ class DedupDeleteSpec extends AnyFunSuite {
       "ingest filtering, the healed-gate, store reads, and compaction all run " +
       "their shuffled fallbacks and the lifecycle output is identical") {
     val state = tmp("dedup-mass-purge")
-    System.setProperty("graft.deleted.broadcast.rows", "0")
-    try {
+    broadcastsOff {
       Dedup.clustersIngestBatch(docs.filter(col("doc_id") < 400), 0, state)
       Dedup.deleteFromDedupState(spark, state,
-        docs.filter(delPred).select("doc_id"), 0.5, broadcastRowBudget = 0L)
+        docs.filter(delPred).select("doc_id"))
       // store read (anti-join shuffled) serves the scrubbed signatures
       assert(Dedup.readSignatureStoreState(spark, state)
         .filter(delPred).count() === 0)
@@ -735,10 +729,10 @@ class DedupDeleteSpec extends AnyFunSuite {
       // compaction's materialize probes/rewrites run shuffled too
       Dedup.compactSignatureStore(spark, state)
       assert(spark.read.parquet(s"$state/sigs").filter(delPred).count() === 0)
-      assert(assignSet(Dedup.readClusterAssignment(spark, state))
-        === assignSet(Dedup.dupClusters(docs.filter(!delPred), 0.5)),
-        "shuffled-fallback lifecycle != broadcast lifecycle output")
-    } finally System.clearProperty("graft.deleted.broadcast.rows")
+    }
+    assert(assignSet(Dedup.readClusterAssignment(spark, state))
+      === assignSet(Dedup.dupClusters(docs.filter(!delPred), 0.5)),
+      "shuffled-fallback lifecycle != broadcast lifecycle output")
   }
 
   test("compaction with pending tombstones but an empty signature store " +

@@ -540,12 +540,15 @@ class IndexServeSpec extends AnyFunSuite {
     assert(rows(Dedup.readMinhashSignatures(spark, sDir))
       === rows(Dedup.minhashSignatures(history.filter(!del1 && !del2))),
       "a torn tombstone dir changed the served store")
-    // mass-purge shape: budget 0 forces the shuffled anti-join, same rows
-    System.setProperty("graft.deleted.broadcast.rows", "0")
-    try assert(rows(Dedup.readMinhashSignatures(spark, sDir))
-      === rows(Dedup.minhashSignatures(history.filter(!del1 && !del2))),
+    // mass-purge shape: broadcasts off force the shuffled anti-join,
+    // same rows
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    val shuffled = try rows(Dedup.readMinhashSignatures(spark, sDir))
+      finally spark.conf.set(key, prev)
+    assert(shuffled === rows(Dedup.minhashSignatures(history.filter(!del1 && !del2))),
       "shuffled-fallback read diverged")
-    finally System.clearProperty("graft.deleted.broadcast.rows")
   }
 
   test("flat-store OVERWRITE carries tombstones (r14 review): a rebuild " +

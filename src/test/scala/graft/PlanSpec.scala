@@ -1,10 +1,13 @@
 package graft
 
 import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.LeftAnti
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeLike, ShuffleOrigin}
+import org.apache.spark.sql.execution.joins.BaseJoinExec
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-shape regression tests: the PERF.md plan audit as assertions,
@@ -57,6 +60,37 @@ class PlanSpec extends AnyFunSuite {
       Thread.sleep(10)
     assert(sc.statusTracker.getJobIdsForGroup(marker).nonEmpty, s"marker job of $group never surfaced")
     sc.statusTracker.getJobIdsForGroup(group).length
+  }
+
+  /** Operator names of the anti joins in an executed plan, AQE stages
+    * and write commands included. */
+  private def antiJoins(p: SparkPlan): Seq[String] = p match {
+    case a: AdaptiveSparkPlanExec => antiJoins(a.executedPlan)
+    case s: QueryStageExec => antiJoins(s.plan)
+    case j: BaseJoinExec if j.joinType == LeftAnti => j.nodeName +: j.children.flatMap(antiJoins)
+    case other => other.children.flatMap(antiJoins)
+  }
+
+  /** [[antiJoins]] of the one query `body` runs that has any (a write's
+    * plan too, which no frame returns). Listener events arrive
+    * asynchronously, so wait for it. */
+  private def antiJoinsRun(body: => Unit): Seq[String] = {
+    val found = new java.util.concurrent.ConcurrentLinkedQueue[Seq[String]]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
+        val js = antiJoins(qe.executedPlan)
+        if (js.nonEmpty) found.add(js)
+      }
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      val deadline = System.nanoTime() + 10_000_000_000L
+      while (found.isEmpty && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(found.size === 1, s"queries with anti joins: $found")
+      found.peek()
+    } finally spark.listenerManager.unregister(listener)
   }
 
   test("q_top_orders plans as TakeOrderedAndProject (no global sort)") {
@@ -691,5 +725,58 @@ class PlanSpec extends AnyFunSuite {
     val kbBc = graft.ops.Dedup.keepBestCorpus(docs, clusters, q)
     assert(kbSh.select("doc_id").collect().map(_.getLong(0)).sorted.toSeq ==
       kbBc.select("doc_id").collect().map(_.getLong(0)).sorted.toSeq)
+  }
+
+  test("deletion-path gate: a one-long-column build side of n rows broadcasts at " +
+      "autoBroadcastJoinThreshold = 16·n and joins shuffled at 16·n − 1 and at −1") {
+    import org.apache.spark.sql.functions.col
+    import graft.ops.{Dedup, VectorOps}
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    // Dedup: the pending tombstones, anti-joined out of every store read
+    val docs = graft.core.Tables.documents(spark, dir)
+    val state = tmp("plan-gate-dedup")
+    Dedup.clustersIngestBatch(docs.filter(col("doc_id") < 400), 0, state)
+    val del = docs.filter(col("doc_id") % 7 === 3 && col("doc_id") < 400).select("doc_id")
+    Dedup.deleteFromDedupState(spark, state, del)
+    // VectorOps: a compaction moves the tombstoned vids into the
+    // deletion log, which every append anti-joins (dropLogged)
+    val emb = graft.core.Tables.embeddings(spark, dir)
+    val ixDir = tmp("plan-gate-ix") + "/ix"
+    VectorOps.writeIvfPqIndex(emb.filter(col("vec_id") < 400), ixDir, 8, 8, 16, 64)
+    val gone = emb.filter(col("vec_id") % 7 === 3 && col("vec_id") < 400)
+    VectorOps.deleteFromIvfPqIndex(spark, ixDir, gone.select(col("vec_id").as("vid")))
+    VectorOps.compactIvfPqIndex(spark, ixDir)
+    for ((frame, n, run) <- Seq[(String, Long, () => Unit)](
+        ("tombstones", del.count(),
+          () => Dedup.readSignatureStoreState(spark, state).collect()),
+        ("deletion log", gone.count(),
+          () => VectorOps.appendToIvfPqIndex(VectorOps.readIvfPqIndex(spark, ixDir), gone, ixDir)))) {
+      assert(n > 0, frame)
+      try for ((threshold, strategy) <- Seq(
+          16 * n -> "BroadcastHashJoin", 16 * n - 1 -> "SortMergeJoin", -1L -> "SortMergeJoin")) {
+        spark.conf.set(key, threshold.toString)
+        assert(antiJoinsRun(run()) === Seq(strategy), s"$frame, threshold $threshold")
+      } finally spark.conf.set(key, prev)
+    }
+  }
+
+  test("the deletion path counts each frame once: with tombstones pending, a " +
+      "micro-batch ingest runs 39 jobs and a compaction 17") {
+    // a count is two jobs under AQE (the partial-aggregate stage, then
+    // the result): the deleted-doc filter and the compaction's
+    // tombstones are each counted once, not twice
+    import org.apache.spark.sql.functions.col
+    import graft.ops.Dedup
+    val docs = graft.core.Tables.documents(spark, dir)
+    val state = java.nio.file.Files.createTempDirectory("plan-del-jobs").toString
+    Dedup.clustersIngestBatch(docs.filter(col("doc_id") < 400), 0, state)
+    Dedup.deleteFromDedupState(spark, state,
+      docs.filter(col("doc_id") % 7 === 3 && col("doc_id") < 400).select("doc_id"))
+    jobsIn("plan-del-ingest")(Dedup.clustersIngestBatch(
+      docs.filter(col("doc_id") >= 400 && col("doc_id") < 450), 1, state))
+    jobsIn("plan-del-compact")(Dedup.compactSignatureStore(spark, state))
+    assert((jobCount("plan-del-ingest"), jobCount("plan-del-compact")) === (39, 17))
   }
 }
