@@ -18,7 +18,9 @@ import org.apache.spark.sql.functions._
   * alone costs ~10 min at 128× doc length — opt in with
   * `ScaleProbe <factor> longdoc`. `ccgate` (also opt-in) times the
   * driver and distributed paths of `Graph.connectedComponentsStar` on
-  * planted graphs around its driver edge budget.
+  * planted graphs around its driver edge budget. `termindex` (opt-in)
+  * measures the retained heap of the related-terms driver index
+  * against the bytes its build counts.
   */
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
@@ -202,6 +204,44 @@ object ScaleProbe {
           .localCheckpoint(true), n)
       }
       probe("lsh_cand", cand, cand.count())
+    }
+
+    if (sections("termindex")) {
+      // heap probe of the related-terms driver index: retained heap of
+      // the held index (after GC, against the heap before the first
+      // call), next to the bytes its build counted. On one-row terms
+      // the rows cost 12 B each, so the rest is the per-term cost.
+      val key = "spark.sql.autoBroadcastJoinThreshold"
+      val default = spark.conf.get(key)
+      val rt = Runtime.getRuntime
+      def usedAfterGc(): Long = { System.gc(); System.gc(); rt.totalMemory - rt.freeMemory }
+      def probe(name: String, corpus: DataFrame): Unit = {
+        val tf = graft.tfidf.TfIdf.tfidf(corpus).persist()
+        val rows = tf.count()
+        val (terms, chars) = {
+          val r = tf.select(countDistinct("term"), sum(length(col("term")))).head
+          (r.getLong(0), r.getLong(1))
+        }
+        val q = graft.sim.Semantic.queryTermFrom(tf)
+        Thread.sleep(500)
+        val base = usedAfterGc()
+        spark.conf.set(key, (1L << 40).toString)
+        try graft.sim.Semantic.relatedTermsFrom(tf, q, 5).collect()
+        finally spark.conf.set(key, default)
+        val held = usedAfterGc() - base
+        val counted = graft.sim.Semantic.heldIndex.map(_._2).getOrElse(-1L)
+        // per-term heap beyond the rows' 12 B and the term's characters
+        val perTerm = (held - rows * graft.sim.TermIndex.RowBytes - chars) / terms.toDouble
+        println(f"[scale] termindex $name%-8s rows=$rows%8d terms=$terms%8d " +
+          f"held=${held / 1048576.0}%6.2fMB counted=${counted / 1048576.0}%6.2fMB " +
+          f"per_term=$perTerm%6.1fB")
+        tf.unpersist(true)
+        graft.sim.Semantic.relatedTermsFrom(tf, q, 5) // releases the held index
+      }
+      // one row per term: 8-character terms, one document each (the
+      // per-term figure behind TermIndex.TermBytes)
+      probe("oneRow", spark.range(0, 200000L * factor, 1, 4)
+        .select(col("id").as("doc_id"), format_string("t%07d", col("id")).as("text")))
     }
 
     if (sections("emission")) {

@@ -36,13 +36,13 @@ object CoreQueries extends graft.QueryModule {
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_related_terms" -> { (spark, dir) =>
       val docs = Tables.documents(spark, dir)
-      // tf persisted across its three reads (query-term derivation,
-      // query vector, candidate aggregation), dropped once the k-row
-      // result materializes
+      // tf persisted for its reads: the query-term derivation loads
+      // the cache, so the query runs on the driver index of it (or
+      // distributed over the gate); dropped once the k rows are local
       val tf = TfIdf.tfidf(docs)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val out = Semantic.relatedTermsFrom(tf, Semantic.queryTermFrom(tf), k = 20)
-        .localCheckpoint(true)
+      val out = Semantic.collectLocal(
+        Semantic.relatedTermsFrom(tf, Semantic.queryTermFrom(tf), k = 20))
       tf.unpersist(false)
       out
     },

@@ -1650,15 +1650,16 @@ object Dedup extends graft.QueryModule {
   def compactSignatureStore(spark: SparkSession, stateDir: String): Unit =
     graft.core.Artifacts.withMaintenanceLease(fsFor(spark, stateDir),
       stateDir, "compactSignatureStore") {
-      compactSignatureStoreImpl(spark, stateDir)
+      compactSignatureStoreImpl(spark, stateDir, measuredTombstones(spark, stateDir))
     }
 
   /** [[compactSignatureStore]] without the lease wrapper — the internal
     * path for [[maintainDedupState]], which already holds the state's
-    * maintenance lease for its whole chain.
+    * maintenance lease for its whole chain. `pending` is the pending
+    * tombstones, read (once) where the compaction first needs them.
     */
   private def compactSignatureStoreImpl(spark: SparkSession,
-      stateDir: String): Unit = {
+      stateDir: String, pending: => Option[Gate.Measured]): Unit = {
     val sigsRoot = s"$stateDir/sigs"
     val conf = spark.sessionState.newHadoopConf()
     val root = new org.apache.hadoop.fs.Path(sigsRoot)
@@ -1697,10 +1698,7 @@ object Dedup extends graft.QueryModule {
           "torn partitions and re-ingest their documents")
     }
     val ids = entries.map(_._1).sorted
-    // lazy checkpoint (r17, job-count sweep): the first consumer is a
-    // full-scan count (its Gate.measure below), which materializes it —
-    // one job instead of two
-    val tombsOpt = pendingTombstones(spark, stateDir).map(_.localCheckpoint(false))
+    val tombsOpt = pending
     if (ids.length <= 3 && tombsOpt.isEmpty) return // {base, prev, current}, no deletes
     val targetBytes = spark.sessionState.conf.filesMaxPartitionBytes
     def bytesOf(dirs: Seq[String]): Long = dirs.map { d =>
@@ -1734,7 +1732,7 @@ object Dedup extends graft.QueryModule {
         absorb.foreach { old =>
           fs.delete(new org.apache.hadoop.fs.Path(s"$sigsRoot/ingest_batch=$old"), true)
         }
-      case Some(tombs0) =>
+      case Some(tombs) =>
         // deletions pending: this fold is the MATERIALIZATION step, so
         // it must REWRITE partitions (append-then-delete can only grow
         // them). Reachable with ZERO signature partitions via the
@@ -1749,9 +1747,7 @@ object Dedup extends graft.QueryModule {
         // the tombstone set is takedown-sized normally, corpus-order
         // under a mass purge — measured once, it gates the healed-state
         // probe and every join below like every other deletion-path
-        // consumer
-        val tombs = Gate.measure(tombs0)
-        // Refuse if the assignment heal hasn't run — clearing
+        // consumer. Refuse if the assignment heal hasn't run — clearing
         // the tombstones below would discard the only evidence the
         // heal needs.
         requireAssignmentsHealed(spark, stateDir, tombs, "compactSignatureStore")
@@ -1832,10 +1828,10 @@ object Dedup extends graft.QueryModule {
         val flatFiles = if (flatSealed) flatLogFiles(fs, logRoot) else Seq.empty
         val logRows =
           if (flatFiles.nonEmpty)
-            tombs0.unionByName(
+            tombs.df.unionByName(
                 spark.read.parquet(flatFiles: _*).select("doc_id"))
               .distinct().localCheckpoint(true)
-          else tombs0
+          else tombs.df
         logRows.write.mode("overwrite")
           .parquet(s"$logRoot/log=${(0L +: logIds.map(_._1)).max + 1}")
         // retire the flat layout whenever its remnants coexist with a
@@ -1929,6 +1925,14 @@ object Dedup extends graft.QueryModule {
   private def pendingTombstones(spark: SparkSession,
       stateDir: String): Option[DataFrame] =
     sealedDelFamilyDocs(spark, s"$stateDir/tombstones")
+
+  /** [[pendingTombstones]] checkpointed and counted — the one frame
+    * a heal and a compaction read. The checkpoint is lazy: the count
+    * is a full scan and materializes it, one job instead of two.
+    */
+  private def measuredTombstones(spark: SparkSession,
+      stateDir: String): Option[Gate.Measured] =
+    pendingTombstones(spark, stateDir).map(t => Gate.measure(t.localCheckpoint(false)))
 
   /** The state's durable DELETION LOG — the
     * [[VectorOps.deleteFromIvfPqIndex]] deletion_log mirrored (review
@@ -2218,7 +2222,7 @@ object Dedup extends graft.QueryModule {
       // and every later tombstone read lists them all
       graft.core.Tables.shrinkSmall(docIds.select("doc_id").distinct())
         .write.mode("overwrite").parquet(s"$root/del=$next")
-      healAssignmentsImpl(spark, stateDir, minEstJaccard)
+      healAssignmentsImpl(spark, stateDir, minEstJaccard, measuredTombstones(spark, stateDir))
     }
   }
 
@@ -2266,25 +2270,26 @@ object Dedup extends graft.QueryModule {
       minEstJaccard: Double = 0.5): Unit =
     graft.core.Artifacts.withMaintenanceLease(fsFor(spark, stateDir),
       stateDir, "healAssignments") {
-      healAssignmentsImpl(spark, stateDir, minEstJaccard)
+      healAssignmentsImpl(spark, stateDir, minEstJaccard, measuredTombstones(spark, stateDir))
     }
 
   /** [[healAssignments]] without the lease wrapper — the internal path
     * for callers that already hold the state's maintenance lease
-    * ([[deleteFromDedupState]], [[maintainDedupState]]).
+    * ([[deleteFromDedupState]], [[maintainDedupState]]). `pending` is
+    * the pending tombstones, read (once) where the heal first needs
+    * them.
     */
   private def healAssignmentsImpl(spark: SparkSession, stateDir: String,
-      minEstJaccard: Double): Unit = {
+      minEstJaccard: Double, pending: => Option[Gate.Measured]): Unit = {
     val assignRoot = s"$stateDir/assign"
     val sigsRoot = s"$stateDir/sigs"
     val fs = fsFor(spark, stateDir)
     requireThreshold(spark, stateDir, minEstJaccard, "healAssignments",
       writeIfAbsent = true)
     graft.core.Artifacts.healRewrites(fs, assignRoot)
-    // lazy checkpoint (r17, job-count sweep): the count below is a
-    // full scan and materializes it — one job instead of two
-    val tombs0 = pendingTombstones(spark, stateDir).getOrElse(return)
-      .localCheckpoint(false)
+    // every join below is Gate.join-strategy-picked by a measured row
+    // count of its (checkpointed) build side
+    val tombs = pending.getOrElse(return)
     requireNoParks(spark, sigsRoot, "healAssignments")
     // TORN-partition gate (r12 ADVICE, medium): the ingest gate
     // deliberately tolerates a torn NEWEST sigs partition pending its
@@ -2310,9 +2315,6 @@ object Dedup extends graft.QueryModule {
       .collect { case (a, true) => a }.sorted
     val (blocked, snapIds) =
       allSnapIds.partition(id => tornSigs.exists(_ <= id))
-    // every join below is Gate.join-strategy-picked by a measured row
-    // count of its (checkpointed) build side
-    val tombs = Gate.measure(tombs0)
     // snapshot heals OVERLAP (r17, guide §2.6): each snapshot's heal is
     // independent and individually complete (disjoint rewrite dirs,
     // shared READ-ONLY inputs — the checkpointed tombstones and the
@@ -2477,12 +2479,14 @@ object Dedup extends graft.QueryModule {
     val partsBefore = sigPartitions().size.toLong
     // a crashed deleteFromDedupState left tombstones without the heal:
     // heal FIRST (compaction would refuse), and report it
-    val pending = pendingTombstones(spark, stateDir)
-    val nTombstoned = pending.map(_.count()).getOrElse(0L)
+    // read and counted once for the report, the heal and the
+    // compaction: the lease keeps deletes from landing in between
+    val pending = measuredTombstones(spark, stateDir)
+    val nTombstoned = pending.map(_.rows).getOrElse(0L)
     val healed = pending.isDefined
-    if (healed) healAssignmentsImpl(spark, stateDir, minEstJaccard) // lease already held
+    if (healed) healAssignmentsImpl(spark, stateDir, minEstJaccard, pending) // lease already held
     leaseRefresh() // heal done — heartbeat before the compaction phase
-    compactSignatureStoreImpl(spark, stateDir) // lease already held
+    compactSignatureStoreImpl(spark, stateDir, pending) // lease already held
     leaseRefresh() // compaction done — heartbeat before the probe
     val partsAfter = sigPartitions().size.toLong
     val nFiles = {

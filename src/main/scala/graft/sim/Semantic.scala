@@ -1,10 +1,23 @@
 package graft.sim
 
-import org.apache.spark.sql.{Column, DataFrame}
+import java.lang.ref.WeakReference
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.Ascending
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.classic.ClassicConversions._
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DoubleType, StringType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
+import graft.core.Gate
 import graft.tfidf.TfIdf
 
 /** Term-term semantic similarity: cosine between document-space TF-IDF
@@ -17,10 +30,12 @@ import graft.tfidf.TfIdf
   * broadcast could exceed limits, so the join strategy is a parameter —
   * `broadcastQuery = false` falls back to a shuffled left join.
   *
-  * A query reads the TF-IDF table twice: once to build the query vector
-  * (which carries ‖q‖ as a window over its own rows, so the norm costs
-  * no pass and no driver round-trip of its own) and once for the
-  * candidate aggregation — two Spark jobs and no shuffle. Deriving the
+  * Distributed, a query reads the TF-IDF table twice: once to build
+  * the query vector (which carries ‖q‖ as a window over its own rows,
+  * so the norm costs no pass and no driver round-trip of its own) and
+  * once for the candidate aggregation — two Spark jobs and no shuffle.
+  * A small loaded table is served from a driver index instead (see
+  * [[relatedTermsFrom]]). Deriving the
   * query term when auto adds one more read, so [[relatedTerms]]
   * persists the table once instead of recomputing the
   * tokenize→count→window chain per read — the 100 TB analogue is
@@ -43,12 +58,14 @@ object Semantic {
       .getOrElse("")
 
   /** Top-k terms most similar to `query`, computing and caching the
-    * TF-IDF table internally. The top-k result (k rows) is eagerly
-    * materialized so the TF-IDF working cache can be dropped before
-    * returning — repeated library calls must not accumulate
-    * MEMORY_AND_DISK state. Multi-query serving should build the tf
-    * table once and use [[relatedTermsFrom]], which leaves caching to
-    * the caller. See [[relatedTermsFrom]].
+    * TF-IDF table internally. The top-k result (k rows) is collected
+    * into a local frame so the TF-IDF working cache can be dropped
+    * before returning — repeated library calls must not accumulate
+    * MEMORY_AND_DISK state. The cache is still loading when the query
+    * runs, so the query is distributed. Multi-query serving should
+    * build, persist and load the tf table once and use
+    * [[relatedTermsFrom]], which leaves caching to the caller and
+    * serves a small loaded table from the driver.
     */
   def relatedTerms(
       docs: DataFrame,
@@ -58,14 +75,17 @@ object Semantic {
       broadcastQuery: Boolean = true,
       roundDigits: Int = 9): DataFrame = {
     val tf = TfIdf.tfidf(docs).persist(StorageLevel.MEMORY_AND_DISK)
-    val out = relatedTermsFrom(tf, query, k, termPred, broadcastQuery, roundDigits)
-      .localCheckpoint(true)
+    val out = collectLocal(relatedTermsFrom(tf, query, k, termPred, broadcastQuery, roundDigits))
     tf.unpersist(false)
     out
   }
 
-  /** Top-k terms most similar to `query` over a prebuilt (ideally
-    * persisted) TF-IDF table.
+  /** `df`'s rows as a frame over a `LocalRelation`: one collect, after
+    * which the frame needs no cache and no Spark job. */
+  private[graft] def collectLocal(df: DataFrame): DataFrame =
+    df.sparkSession.createDataFrame(df.collectAsList(), df.schema)
+
+  /** Top-k terms most similar to `query` over a prebuilt TF-IDF table.
     *
     * Output: (term string, sim double), sim rounded to `roundDigits`
     * (Spark-vs-oracle summation-order noise), descending, ties broken by
@@ -75,6 +95,42 @@ object Semantic {
     * (app.py:175 vs :178) — order-equivalent since the norm is a positive
     * constant; we normalize first and report honest cosine values
     * (SURVEY.md §7.4.3).
+    *
+    * Two paths return the same rows (`==`, raw or rounded):
+    *   - '''driver''': when `tf` is persisted, its cache is loaded,
+    *     and it is laid out as [[TfIdf.tfidf]] leaves it (hash(term)
+    *     partitioned, each partition sorted by (term, doc_id)), the
+    *     first call collects its `(term, doc_id, tfidf)` rows — one
+    *     Spark job — into a driver index of primitive arrays, and
+    *     every call answers from that index with no job, returning
+    *     the ≤ k rows as a frame over a `LocalRelation`.
+    *   - '''distributed''': every other call — `termPred` set (the
+    *     predicate is a Column, so it stays in Spark), `k < 0`, a frame
+    *     not persisted, not yet loaded, laid out otherwise, or over the
+    *     gate — runs [[relatedTermsDistributed]]: two Spark jobs.
+    *
+    * The gate is `spark.sql.autoBroadcastJoinThreshold`
+    * ([[Gate.broadcastThreshold]]), applied to the bytes the index
+    * itself holds: 12 B a row (an `int` doc index, a `double` weight)
+    * and [[TermIndex.TermBytes]] plus the characters a term. A loaded
+    * cache's row count × 12 B over the threshold skips the collect;
+    * otherwise the build counts as it goes and gives up once past the
+    * threshold. A threshold ≤ 0 turns the driver path off. Each cached
+    * frame is decided once, fit or not, so no frame pays the collect
+    * twice. Only the last frame served keeps its index (plain JVM
+    * arrays: no persist, no broadcast); the next call releases it once
+    * that frame is unpersisted or garbage-collected, or once it is over
+    * the current threshold. A re-persisted frame is a new cache, never
+    * served from the old index.
+    *
+    * Bit-identity of the driver path: each term's products and
+    * squares are summed in the table's row order (the order the
+    * distributed aggregate adds them in); the query's own Σ tfidf²
+    * gives ‖q‖; the division is two-step, `(num / √den2) / den1`;
+    * rounding is Spark's (HALF_UP in decimal); `num == 0` and the
+    * query term are dropped; the order is `sim` descending, then the
+    * term in UTF-8 byte order. `broadcastQuery` only picks the
+    * distributed path's join.
     */
   def relatedTermsFrom(
       tf: DataFrame,
@@ -82,7 +138,26 @@ object Semantic {
       k: Int = 5,
       termPred: Option[Column] = None,
       broadcastQuery: Boolean = true,
-      roundDigits: Int = 9): DataFrame = {
+      roundDigits: Int = 9): DataFrame =
+    (if (termPred.isEmpty && k >= 0) driverIndex(tf) else None)
+      .flatMap(_.related(query, k, roundDigits))
+      .map { top =>
+        val schema = StructType(Seq(tf.schema("term"), StructField("sim", DoubleType)))
+        tf.sparkSession.createDataFrame(
+          top.map { case (t, s) => Row(t, s) }.asJava, schema)
+      }
+      .getOrElse(
+        relatedTermsDistributed(tf, query, k, termPred, broadcastQuery, roundDigits))
+
+  /** The distributed plan: two Spark jobs, no shuffle on a table laid
+    * out as [[TfIdf.tfidf]] leaves it. */
+  private def relatedTermsDistributed(
+      tf: DataFrame,
+      query: String,
+      k: Int,
+      termPred: Option[Column],
+      broadcastQuery: Boolean,
+      roundDigits: Int): DataFrame = {
     // ‖query‖₂ rides the query vector: every row has the same term, so
     // the window covers the whole vector, and the table is already
     // hash(term)-partitioned, so it adds no exchange. An absent term (no
@@ -119,6 +194,72 @@ object Semantic {
       .orderBy(col("sim").desc, col("term"))
       .limit(k)
   }
+
+  // The last frame served from the driver: its cache's RDD (weakly) and
+  // its index. Caches are told apart by their RDD, whose equality is
+  // identity: a re-persisted frame is a new RDD.
+  private var held: (WeakReference[RDD[_]], TermIndex) = _
+  // every cache decided so far, fit or not
+  private val decided = new java.util.WeakHashMap[RDD[_], java.lang.Boolean]()
+
+  /** The held index and its counted bytes, for tests of its lifetime. */
+  private[graft] def heldIndex: Option[(AnyRef, Long)] =
+    synchronized(Option(held).map { case (_, ix) => (ix, ix.bytes) })
+
+  /** The driver index of `tf`, if `tf` is servable from the driver
+    * (see [[relatedTermsFrom]]): built on the first call for its cache. */
+  private def driverIndex(tf: DataFrame): Option[TermIndex] = synchronized {
+    val threshold = Gate.broadcastThreshold(tf.sparkSession)
+    if (held != null) {
+      val cache = held._1.get
+      // an unpersisted cache's RDD is unpersisted too
+      if (cache == null || cache.getStorageLevel == StorageLevel.NONE ||
+          held._2.bytes > threshold) held = null
+    }
+    if (threshold <= 0) return None
+    loadedTfCache(tf).flatMap { rel =>
+      val cache = rel.cacheBuilder.cachedColumnBuffers
+      if (held != null && (held._1.get eq cache)) Some(held._2)
+      else if (decided.put(cache, java.lang.Boolean.TRUE) != null) None
+      // the loaded cache's own count: over the gate before any collect
+      else if (rel.cacheBuilder.rowCountStats.value * TermIndex.RowBytes > threshold) None
+      else {
+        val qe = tf.select(col("term"), col("doc_id"), col("tfidf")).queryExecution
+        val rows = SQLExecution.withNewExecutionId(qe, Some("collect"))(
+          qe.executedPlan.executeCollect())
+        val index = TermIndex.build(rows, tf.schema("doc_id").dataType, threshold)
+        index.foreach(ix => held = (new WeakReference(cache), ix))
+        index
+      }
+    }
+  }
+
+  /** The cache of `tf` itself when it is loaded and laid out as
+    * [[TfIdf.tfidf]] leaves it: hash(term) partitions, each sorted by
+    * (term, doc_id), so a term's rows arrive together and in the order
+    * the distributed aggregate sums them. */
+  private def loadedTfCache(tf: DataFrame): Option[InMemoryRelation] =
+    tf.sparkSession.sharedState.cacheManager.lookupCachedData(tf)
+      .map(_.cachedRepresentation)
+      .filter(rel => rel.cacheBuilder.isCachedColumnBuffersLoaded && {
+        // a cached plan under AQE reports its layout once final
+        val plan = rel.cacheBuilder.cachedPlan match {
+          case a: AdaptiveSparkPlanExec => a.executedPlan
+          case p => p
+        }
+        def attr(name: String, ok: DataType => Boolean) =
+          plan.output.find(_.name == name).filter(a => ok(a.dataType)).map(_.canonicalized)
+        (attr("term", _ == StringType), attr("doc_id", TermIndex.supports),
+            attr("tfidf", _ == DoubleType)) match {
+          case (Some(term), Some(doc), Some(_)) =>
+            (plan.outputPartitioning match {
+              case h: HashPartitioning => h.expressions.map(_.canonicalized) == Seq(term)
+              case _ => false
+            }) && plan.outputOrdering.take(2).map(o => (o.child.canonicalized, o.direction)) ==
+              Seq(term -> Ascending, doc -> Ascending)
+          case _ => false
+        }
+      })
 
   /** Reference-parity predicate: terms shaped `gene_*_gene` (app.py:145). */
   val geneTermPredicate: Column =

@@ -44,6 +44,24 @@ class GoldenFixtureSpec extends AnyFunSuite {
     assert(related("gene_kras_gene") == Seq("gene_egfr_gene" -> 0.34299717028501764))
   }
 
+  test("golden: the driver index of a persisted, loaded tf gives the same rows") {
+    // no termPred on the driver path: rank every term, keep the gene ones.
+    // The expected rows first: relatedTerms caches the same plan and
+    // drops that cache when done.
+    val expected = Seq("gene_egfr_gene", "gene_tp53_gene", "gene_kras_gene").map(q => q -> related(q))
+    val tf = TfIdf.tfidf(golden).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      tf.count()
+      for ((q, rows) <- expected) {
+        val out = Semantic.relatedTermsFrom(tf, q, k = 100, roundDigits = -1)
+        assert(out.queryExecution.executedPlan.nodeName == "LocalTableScan", q)
+        val gene = out.collect().map(r => (r.getString(0), r.getDouble(1)))
+          .filter { case (t, _) => t.startsWith("gene_") && t.endsWith("_gene") }.take(5).toSeq
+        assert(gene == rows, q)
+      }
+    } finally tf.unpersist(false)
+  }
+
   test("edge: a query term in every document (idf 0, so ‖q‖ = 0) → empty result") {
     val c = corpus("d1" -> "the apple", "d2" -> "the banana apple", "d3" -> "the cherry")
     assert(Semantic.relatedTerms(c, "the", k = 5).collect().isEmpty)

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.LeftAnti
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.{LocalTableScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeLike, ShuffleOrigin}
 import org.apache.spark.sql.execution.joins.BaseJoinExec
@@ -137,13 +137,27 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("BroadcastHashJoin"), p)
   }
 
+  /** `body` with `spark.sql.autoBroadcastJoinThreshold` at `bytes`. */
+  private def withThreshold[T](bytes: Long)(body: => T): T = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, bytes.toString)
+    try body finally spark.conf.set(key, prev)
+  }
+
+  /** A persisted tf-idf table of the sf0.001 corpus, its cache loaded. */
+  private def loadedTf() = {
+    val tf = graft.tfidf.TfIdf.tfidf(graft.core.Tables.documents(spark, dir))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    tf.count()
+    tf
+  }
+
   test("relatedTermsFrom on a persisted tf: building the frame runs no job, " +
       "collecting it runs two (query-vector broadcast, aggregate + top-k), no shuffle") {
-    val docs = graft.core.Tables.documents(spark, dir)
-    val tf = graft.tfidf.TfIdf.tfidf(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      tf.count()
+    // the distributed path: broadcasts off, so no driver index
+    val tf = loadedTf()
+    try withThreshold(-1) {
       val q = graft.sim.Semantic.queryTermFrom(tf)
       val df = jobsIn("plan-related-build") {
         graft.sim.Semantic.relatedTermsFrom(tf, q, 5)
@@ -156,6 +170,77 @@ class PlanSpec extends AnyFunSuite {
       assert(shuffles(p) === 0, p)
       assert(p.toString.contains("BroadcastExchange"), p)
     } finally tf.unpersist(false)
+  }
+
+  test("relatedTermsFrom under the gate: the first call runs only the index collect, " +
+      "a later call runs no job and its plan is a LocalTableScan") {
+    import graft.sim.Semantic
+    val tf = loadedTf()
+    try {
+      val q = Semantic.queryTermFrom(tf)
+      val first = jobsIn("plan-related-index")(Semantic.relatedTermsFrom(tf, q, 5).collect())
+      assert(jobCount("plan-related-index") === 1)
+      val df = jobsIn("plan-related-driver")(Semantic.relatedTermsFrom(tf, q, 5))
+      val rows = jobsIn("plan-related-driver")(df.collect())
+      assert(jobCount("plan-related-driver") === 0)
+      assert(rows.nonEmpty && rows.toSeq === first.toSeq)
+      assert(df.queryExecution.executedPlan.isInstanceOf[LocalTableScanExec],
+        df.queryExecution.executedPlan)
+      val distributed = withThreshold(-1)(Semantic.relatedTermsFrom(tf, q, 5))
+      assert(df.schema === distributed.schema)
+      assert(rows.toSeq === distributed.collect().toSeq)
+    } finally tf.unpersist(false)
+  }
+
+  test("relatedTermsFrom over the gate: one byte below the index's counted size, the " +
+      "first call collects once and goes distributed, later calls run two jobs each") {
+    import graft.sim.Semantic
+    val tf = loadedTf()
+    try {
+      val q = Semantic.queryTermFrom(tf)
+      val expected = Semantic.relatedTermsFrom(tf, q, 5).collect().toSeq
+      val bytes = Semantic.heldIndex.map(_._2).getOrElse(fail("no index held"))
+      // persisted again: a new cache, decided afresh
+      tf.unpersist(true)
+      tf.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK).count()
+      withThreshold(bytes - 1) {
+        val counts = for (call <- 1 to 3) yield {
+          val group = s"plan-related-over-$call"
+          val rows = jobsIn(group)(Semantic.relatedTermsFrom(tf, q, 5).collect())
+          assert(rows.toSeq === expected, s"call $call")
+          assert(Semantic.heldIndex.isEmpty, s"call $call")
+          jobCount(group)
+        }
+        assert(counts === Seq(3, 2, 2))
+      }
+    } finally tf.unpersist(false)
+  }
+
+  test("relatedTermsFrom after unpersist: the next call is distributed and the held " +
+      "index is released") {
+    import graft.sim.Semantic
+    val tf = loadedTf()
+    val q = Semantic.queryTermFrom(tf)
+    val expected = Semantic.relatedTermsFrom(tf, q, 5).collect().toSeq
+    val index = new java.lang.ref.WeakReference(
+      Semantic.heldIndex.map(_._1).getOrElse(fail("no index held")))
+    tf.unpersist(true)
+    val df = Semantic.relatedTermsFrom(tf, q, 5)
+    assert(df.collect().toSeq === expected)
+    assert(df.queryExecution.executedPlan.toString.contains("BroadcastHashJoin"))
+    assert(Semantic.heldIndex.isEmpty)
+    assert((1 to 50).exists { _ => System.gc(); Thread.sleep(20); index.get == null },
+      "the released index is still reachable")
+  }
+
+  test("relatedTerms: one collect of the k result rows and no checkpoint: " +
+      "8 jobs, one fewer than checkpointing them") {
+    val docs = graft.core.Tables.documents(spark, dir)
+    val q = graft.sim.Semantic.queryTermFrom(graft.tfidf.TfIdf.tfidf(docs))
+    val rows = jobsIn("plan-related-terms")(
+      graft.sim.Semantic.relatedTerms(docs, q, 5).collect())
+    assert(rows.nonEmpty)
+    assert(jobCount("plan-related-terms") === 8)
   }
 
   test("connectedComponentsStar on a small edge list runs only its edge collect: " +
@@ -778,5 +863,19 @@ class PlanSpec extends AnyFunSuite {
       docs.filter(col("doc_id") >= 400 && col("doc_id") < 450), 1, state))
     jobsIn("plan-del-compact")(Dedup.compactSignatureStore(spark, state))
     assert((jobCount("plan-del-ingest"), jobCount("plan-del-compact")) === (39, 17))
+  }
+
+  test("maintainDedupState reads and counts the pending tombstones once for its " +
+      "report, heal and compaction: 42 jobs, 8 fewer than reading them three times") {
+    import org.apache.spark.sql.functions.col
+    import graft.ops.Dedup
+    val docs = graft.core.Tables.documents(spark, dir)
+    val state = java.nio.file.Files.createTempDirectory("plan-maintain-jobs").toString
+    Dedup.clustersIngestBatch(docs.filter(col("doc_id") < 400), 0, state)
+    Dedup.deleteFromDedupState(spark, state,
+      docs.filter(col("doc_id") % 7 === 3 && col("doc_id") < 400).select("doc_id"))
+    val report = jobsIn("plan-maintain")(Dedup.maintainDedupState(spark, state)).collect().head
+    assert(report.getAs[Long]("n_tombstoned_docs") > 0)
+    assert(jobCount("plan-maintain") === 42)
   }
 }

@@ -1,7 +1,8 @@
 package graft
 
+import org.apache.spark.storage.StorageLevel
 import org.scalacheck.{Gen, Prop, Properties, Test}
-import org.scalacheck.Prop.forAll
+import org.scalacheck.Prop.{forAll, propBoolean}
 
 import graft.sim.Semantic
 import graft.tfidf.TfIdf
@@ -72,5 +73,53 @@ object SemanticProps extends Properties("Semantic") {
         (s"d$n", "filler words only")
       val s = simMap(corpus, "x")
       Prop(math.abs(s.getOrElse("y", 0.0) - 1.0) < 1e-9) :| s"sims=$s"
+    }
+
+  // U+FF21 sorts after U+1F600 in UTF-16 and before it in UTF-8 (Spark's
+  // order); the two always occur together, so their sims tie
+  private val tied = "\uFF21 \uD83D\uDE00"
+
+  /** Corpora with repeated doc ids, empty and blank docs, double
+    * spaces, the tied unicode pair, and optionally a term in every doc
+    * (idf 0 when the ids are distinct). */
+  private val genEdgeCorpus: Gen[List[(String, String)]] = for {
+    n <- Gen.chooseNum(1, 7)
+    dupIds <- Gen.oneOf(false, true)
+    every <- Gen.oneOf(false, true)
+    docs <- Gen.listOfN(n, Gen.frequency(
+      1 -> Gen.const(""), 1 -> Gen.const("   "),
+      8 -> (for {
+        len <- Gen.chooseNum(1, 6)
+        toks <- Gen.listOfN(len, Gen.oneOf(vocab :+ tied))
+        sep <- Gen.oneOf(" ", "  ")
+      } yield toks.mkString(sep))))
+  } yield docs.zipWithIndex.map { case (t, i) =>
+    (if (dupIds) s"d${i / 2}" else s"d$i", if (every) s"$t every" else t)
+  }
+
+  property("driver index == distributed plan, raw and at 9 digits") =
+    forAll(genEdgeCorpus, Gen.oneOf(1, 3, 100)) { (c, k) =>
+      val tf = graft.tfidf.TfIdf.tfidf(df(c)).persist(StorageLevel.MEMORY_AND_DISK)
+      try {
+        tf.count()
+        val queries = Seq("every", "absent", "\uFF21", "\uD83D\uDE00") ++ vocab
+        def run(q: String, digits: Int) = {
+          val out = Semantic.relatedTermsFrom(tf, q, k, roundDigits = digits)
+          (out.queryExecution.executedPlan.nodeName, out.schema, out.collect().toSeq)
+        }
+        val cases = for (q <- queries; d <- Seq(-1, 9)) yield (q, d)
+        val driver = cases.map { case (q, d) => run(q, d) }
+        val key = "spark.sql.autoBroadcastJoinThreshold"
+        val prev = spark.conf.get(key)
+        spark.conf.set(key, "-1")
+        val distributed = try cases.map { case (q, d) => run(q, d) }
+          finally spark.conf.set(key, prev)
+        Prop.all(cases.indices.map { i =>
+          val ((q, d), (node, schema, rows)) = (cases(i), driver(i))
+          val (_, dSchema, dRows) = distributed(i)
+          (node == "LocalTableScan" && schema == dSchema && rows == dRows) :|
+            s"q=$q digits=$d k=$k: $node $rows vs $dRows"
+        }: _*)
+      } finally tf.unpersist(false)
     }
 }
