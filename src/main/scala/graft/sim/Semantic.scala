@@ -9,8 +9,8 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.Ascending
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.classic.ClassicConversions._
-import org.apache.spark.sql.execution.SQLExecution
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.{EmptyRelationExec, SQLExecution}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -98,12 +98,12 @@ object Semantic {
     *
     * Two paths return the same rows (`==`, raw or rounded):
     *   - '''driver''': when `tf` is persisted, its cache is loaded,
-    *     and it is laid out as [[TfIdf.tfidf]] leaves it (hash(term)
-    *     partitioned, each partition sorted by (term, doc_id)), the
-    *     first call collects its `(term, doc_id, tfidf)` rows — one
-    *     Spark job — into a driver index of primitive arrays, and
-    *     every call answers from that index with no job, returning
-    *     the ≤ k rows as a frame over a `LocalRelation`.
+    *     and it is empty or laid out as [[TfIdf.tfidf]] leaves it
+    *     (hash(term) partitioned, each partition sorted by (term,
+    *     doc_id)), the first call collects its `(term, doc_id, tfidf)`
+    *     rows — one Spark job — into a driver index of primitive
+    *     arrays, and every call answers from that index with no job,
+    *     returning the ≤ k rows as a frame over a `LocalRelation`.
     *   - '''distributed''': every other call — `termPred` set (the
     *     predicate is a Column, so it stays in Spark), `k < 0`, a frame
     *     not persisted, not yet loaded, laid out otherwise, or over the
@@ -237,7 +237,7 @@ object Semantic {
   /** The cache of `tf` itself when it is loaded and laid out as
     * [[TfIdf.tfidf]] leaves it: hash(term) partitions, each sorted by
     * (term, doc_id), so a term's rows arrive together and in the order
-    * the distributed aggregate sums them. */
+    * the distributed aggregate sums them; or when it is empty. */
   private def loadedTfCache(tf: DataFrame): Option[InMemoryRelation] =
     tf.sparkSession.sharedState.cacheManager.lookupCachedData(tf)
       .map(_.cachedRepresentation)
@@ -252,7 +252,10 @@ object Semantic {
         (attr("term", _ == StringType), attr("doc_id", TermIndex.supports),
             attr("tfidf", _ == DoubleType)) match {
           case (Some(term), Some(doc), Some(_)) =>
-            (plan.outputPartitioning match {
+            // AQE plans a table it found empty as an empty relation (in
+            // its result stage), which has no layout and no rows to order
+            Some(plan).collect { case s: QueryStageExec => s.plan }.getOrElse(plan)
+              .isInstanceOf[EmptyRelationExec] || (plan.outputPartitioning match {
               case h: HashPartitioning => h.expressions.map(_.canonicalized) == Seq(term)
               case _ => false
             }) && plan.outputOrdering.take(2).map(o => (o.child.canonicalized, o.direction)) ==

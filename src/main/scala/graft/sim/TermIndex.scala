@@ -124,11 +124,6 @@ private[graft] object TermIndex {
   def build(rows: Array[InternalRow], docId: DataType, budget: Long): Option[TermIndex] = {
     var bytes = rows.length * RowBytes
     if (bytes > budget) return None
-    val docKey: InternalRow => AnyRef = docId match {
-      case StringType => _.getUTF8String(1)
-      case LongType => r => java.lang.Long.valueOf(r.getLong(1))
-      case IntegerType => r => java.lang.Long.valueOf(r.getInt(1).toLong)
-    }
     val docIds = new java.util.HashMap[AnyRef, Integer]()
     val ids = new java.util.HashMap[String, Integer]()
     val terms = Array.newBuilder[String]
@@ -160,7 +155,7 @@ private[graft] object TermIndex {
       }
       val d =
         if (row.isNullAt(1)) -1
-        else docIds.computeIfAbsent(docKey(row), _ => Integer.valueOf(docIds.size)).intValue
+        else docIds.computeIfAbsent(row.get(1, docId), _ => Integer.valueOf(docIds.size)).intValue
       if (d >= 0 && i > start && docs(i - 1) == d) return None
       docs(i) = d
       weights(i) = w

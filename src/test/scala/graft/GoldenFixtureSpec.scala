@@ -62,6 +62,19 @@ class GoldenFixtureSpec extends AnyFunSuite {
     } finally tf.unpersist(false)
   }
 
+  test("edge: a loaded tf with no rows (blank documents only) is served from the driver") {
+    // adaptive execution plans the empty table as an empty relation,
+    // which has no hash(term) layout to check
+    val tf = TfIdf.tfidf(corpus("d1" -> "", "d2" -> "   "))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      assert(tf.count() == 0)
+      val out = Semantic.relatedTermsFrom(tf, "apple", k = 5)
+      assert(out.queryExecution.executedPlan.nodeName == "LocalTableScan")
+      assert(out.collect().isEmpty)
+    } finally tf.unpersist(false)
+  }
+
   test("edge: a query term in every document (idf 0, so ‖q‖ = 0) → empty result") {
     val c = corpus("d1" -> "the apple", "d2" -> "the banana apple", "d3" -> "the cherry")
     assert(Semantic.relatedTerms(c, "the", k = 5).collect().isEmpty)
